@@ -630,7 +630,8 @@ def _lsh_index_compact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def mutate(path: str) -> None:
         delete_from_lsh_index(spark, path, list(_LSH_DELETED_IDS))
         folded = compact_lsh_index(spark, path)
-        assert folded == len(_LSH_DELETED_IDS), folded
+        if folded != len(_LSH_DELETED_IDS):
+            raise RuntimeError(folded)
 
     path = _derive_artifact(
         spark, sf_dir, "lsh_cpt_", _lsh_index_path(spark, sf_dir), mutate
@@ -2997,15 +2998,19 @@ def _store_crud_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(1).alias("one"))
         )
     )
-    assert residue.isEmpty()  # one job covers both tables
+    if not residue.isEmpty():  # one job covers both tables
+        raise RuntimeError("delete_library left chunks or documents behind")
 
     # M8: rename preserves created_at, bumps updated_at
     before = store.libraries.filter(F.col("library_id") == lid).head()
     store.update_library(lid, name="lifecycle-renamed")
     after = store.libraries.filter(F.col("library_id") == lid).head()
-    assert after["name"] == "lifecycle-renamed"
-    assert after["created_at"] == before["created_at"]
-    assert after["updated_at"] >= before["updated_at"]
+    if not (
+        after["name"] == "lifecycle-renamed"
+        and after["created_at"] == before["created_at"]
+        and after["updated_at"] >= before["updated_at"]
+    ):
+        raise RuntimeError(f"update_library rename: {before} -> {after}")
 
     texts = {
         r["doc_id"]: r["text"]

@@ -73,7 +73,7 @@ def main() -> None:
         # measured 8.6 s first vs 0.7 s steady-state in one session) —
         # session-wide machinery of the same class as the pandas-UDF
         # worker pool warmed above.  A 2-row throwaway feed file in
-        # /tmp: NOT the bench feed (which each feed entry stages
+        # /tmp, removed once the warm query has run: NOT the bench feed (which each feed entry stages
         # itself, keyed by sf_dir), so nothing a timed row serves from
         # is precomputed here.
         import tempfile
@@ -82,13 +82,16 @@ def main() -> None:
 
         register_feed_source(spark)
         fd, tiny_feed = tempfile.mkstemp(suffix=".jsonl", prefix="feed_warm_")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(
-                '{"doc_id": 0, "text": "w", "lang": "en",'
-                ' "source": "warm", "n_chars": 1}\n'
-            )
-        spark.read.format("document_feed").option("path", tiny_feed).load(
-        ).groupBy("source").count().collect()
+        try:
+            with os.fdopen(fd, "w") as fh:
+                fh.write(
+                    '{"doc_id": 0, "text": "w", "lang": "en",'
+                    ' "source": "warm", "n_chars": 1}\n'
+                )
+            spark.read.format("document_feed").option("path", tiny_feed).load(
+            ).groupBy("source").count().collect()
+        finally:
+            os.unlink(tiny_feed)
     except Exception:
         pass  # warmup is best-effort; timings just run colder
 

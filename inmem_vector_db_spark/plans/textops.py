@@ -3197,7 +3197,8 @@ def _curriculum_cells(light: DataFrame, B: int = _CURR_RANK_BUCKETS):
         rows.append((nt, part, cid, cell_off))
         acc += cnt
         off += cnt
-    assert off == n, (off, n)
+    if off != n:
+        raise RuntimeError((off, n))
     return n, lo, W, rows
 
 

@@ -16,6 +16,33 @@ from inmem_vector_db_spark.operators.ann import (
 from inmem_vector_db_spark.operators.knn import knn
 
 
+def file_codecs(files) -> dict:
+    """{file: set of column-chunk codecs} from each file's parquet footer."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        out[f] = {
+            md.row_group(g).column(c).compression
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        }
+    return out
+
+
+def assert_zstd(path: str) -> None:
+    """Every parquet file of the IVF artifact at ``path`` -- inverted
+    lists and centroid table -- is ZSTD-compressed."""
+    import glob
+
+    for part in ("vectors/cluster_id=*", "centroids"):
+        files = glob.glob(f"{path}/{part}/*.parquet")
+        assert files, f"no parquet files under {path}/{part}"
+        bad = {f: c for f, c in file_codecs(files).items() if c != {"ZSTD"}}
+        assert not bad, bad
+
+
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
@@ -228,6 +255,7 @@ def test_written_ivf_index_partition_pruning(emb, tmp_path):
     assert sorted((r["vec_id"], round(r["dist"], 6)) for r in got.collect()) == sorted(
         (r["vec_id"], round(r["dist"], 6)) for r in want.collect()
     )
+    assert_zstd(path)
 
 
 def test_ivf_assign_keep_cols_carries_attributes(emb):
@@ -297,6 +325,7 @@ def test_append_ivf_matches_full_build(emb, tmp_path):
     res_inc = ivf_search_indexed(spark, inc, q, k=10, nprobe=3).collect()
     res_full = ivf_search_indexed(spark, full, q, k=10, nprobe=3).collect()
     assert [r["vec_id"] for r in res_inc] == [r["vec_id"] for r in res_full]
+    assert_zstd(inc)
 
 
 def test_streamed_append_equals_batch_append(emb, tmp_path):
@@ -397,6 +426,7 @@ def test_delete_from_ivf_index(emb, tmp_path):
     assert one_id not in [r["vec_id"] for r in res]
 
     assert delete_from_ivf_index(spark, path, [10**9]) == 0  # absent id no-op
+    assert_zstd(path)
 
 
 def test_compact_ivf_index(emb, tmp_path):
@@ -435,6 +465,60 @@ def test_compact_ivf_index(emb, tmp_path):
     )
     assert after == before
     assert compact_ivf_index(spark, path) == 0  # idempotent
+    assert_zstd(path)
+
+
+def test_snappy_artifact_maintenance_matches_zstd(spark, emb, tmp_path):
+    """An index whose files were written snappy (the codec before lists
+    were zstd) stays fully maintainable: append, delete and compact give
+    the same content as on a zstd index, and every list a maintenance
+    rewrite touched comes out ZSTD."""
+    import glob
+
+    from inmem_vector_db_spark.operators.ann import (
+        append_ivf_index,
+        compact_ivf_index,
+        delete_from_ivf_index,
+        write_ivf_index,
+    )
+
+    base = emb.filter(F.col("vec_id") < 300)
+    new, old = str(tmp_path / "zstd"), str(tmp_path / "snappy")
+    write_ivf_index(base, new, stride=50)
+    for part, layout in (("centroids", []), ("vectors", ["cluster_id"])):
+        spark.read.parquet(f"{new}/{part}").write.option(
+            "compression", "snappy"
+        ).partitionBy(*layout).parquet(f"{old}/{part}")
+    assert all(
+        c == {"SNAPPY"}
+        for c in file_codecs(glob.glob(f"{old}/*/**/*.parquet", recursive=True)).values()
+    )
+
+    doomed = [r["vec_id"] for r in base.filter(F.col("vec_id") % 7 == 3).collect()]
+    for path in (new, old):
+        append_ivf_index(emb.filter(F.col("vec_id") >= 300), path)
+        delete_from_ivf_index(spark, path, doomed)
+    rewritten = [
+        d for d in glob.glob(f"{old}/vectors/cluster_id=*")
+        if len(glob.glob(f"{d}/*.parquet")) >= 2
+    ]
+    assert rewritten  # the append fragmented the snappy lists
+    assert compact_ivf_index(spark, old) == len(rewritten)
+    compact_ivf_index(spark, new)
+
+    def content(path):
+        return sorted(
+            (r["vec_id"], r["cluster_id"], tuple(r["embedding"]))
+            for r in spark.read.parquet(f"{path}/vectors").collect()
+        )
+
+    got = content(old)
+    assert got == content(new)
+    assert not {r[0] for r in got} & set(doomed)
+    for d in rewritten:
+        assert all(
+            c == {"ZSTD"} for c in file_codecs(glob.glob(f"{d}/*.parquet")).values()
+        ), d
 
 
 def test_rebuild_from_artifact_equals_scratch_build(spark, emb, tmp_path):
@@ -475,6 +559,7 @@ def test_rebuild_from_artifact_equals_scratch_build(spark, emb, tmp_path):
     assert len(cents(new)) > 5
     # old artifact untouched
     assert spark.read.parquet(f"{old}/vectors").count() == before
+    assert_zstd(new)
 
 
 def test_merge_ivf_equals_direct_append(spark, emb, tmp_path):
@@ -516,6 +601,7 @@ def test_merge_ivf_equals_direct_append(spark, emb, tmp_path):
     assert cents(dst) == cents(want_path)
     # source shard untouched (it keeps serving until decommissioned)
     assert spark.read.parquet(f"{src}/vectors").count() == src_before
+    assert_zstd(dst)
 
 
 def test_merge_ivf_rejects_overlapping_ids(spark, emb, tmp_path):

@@ -1,23 +1,31 @@
-"""Regenerate PLANS.md: the formatted physical plan of each headline
-query, with a one-line reading of why the plan is the right one at
-scale.  Evidence for plan-level claims (pushdown, broadcast, no-shuffle
-top-k) that COVERAGE.md makes.
+"""Dump formatted physical plans.
 
-Usage: python tools/dump_plans.py
+Usage:
+    python tools/dump_plans.py
+    python tools/dump_plans.py --out DIR [--tree T] [--sf SF] before|after NAMES...
+
+With no arguments, regenerate PLANS.md: the formatted physical plan of
+each headline query at sf0.01, with a one-line reading of why the plan
+is the right one at scale.  Evidence for plan-level claims (pushdown,
+broadcast, no-shuffle top-k) that COVERAGE.md makes.
+
+With a side and entry names, write ``DIR/<name>_<side>.txt`` for each
+named entry, built from the checkout at ``T`` (default: this one) at
+``SF`` (default sf0.001, the plan-audit SF: plan SHAPE is what the files
+evidence, and the tiny corpus keeps artifact builds cheap).  Dump
+``before`` with ``--tree`` pointing at a checkout of the parent commit
+and ``after`` from this one, into the same ``DIR``.
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
 from contextlib import redirect_stdout
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO_ROOT)
-
-import __spark_entry__ as entrymod  # noqa: E402
-from inmem_vector_db_spark.session import get_spark  # noqa: E402
 
 HEADLINERS = {
     "knn_cosine": "no Exchange anywhere: scan -> project(distance) -> "
@@ -347,12 +355,18 @@ HEADLINERS = {
 }
 
 
-def main() -> None:
+def formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def write_plans_md(get_spark, qs) -> None:
     spark = get_spark("plan-dump", master="local[4]",
                       extra_conf={"spark.sql.shuffle.partitions": "8"})
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = "/root/testdata/sf0.01"
-    qs = entrymod.queries()
     lines = [
         "# PLANS — physical plans of headline queries (sf0.01, regenerate "
         "with `python tools/dump_plans.py`)",
@@ -362,11 +376,7 @@ def main() -> None:
         "",
     ]
     for name, reading in HEADLINERS.items():
-        df = qs[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted_plan(qs[name](spark, sf_dir))
         # keep the operator tree + the first lines of each node, drop the
         # full expression dumps (hundreds of chars of literal vectors)
         kept = []
@@ -380,5 +390,48 @@ def main() -> None:
     print(f"wrote PLANS.md ({len(lines)} lines)")
 
 
+def dump_side(get_spark, qs, side: str, names, out_dir: str, sf_dir: str) -> None:
+    spark = get_spark(f"dump_plans_{side}")
+    spark.sparkContext.setLogLevel("ERROR")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        try:
+            txt = formatted_plan(qs[name](spark, sf_dir))
+        except Exception as exc:  # keep going
+            txt = f"FAILED to build plan: {exc}"
+        path = os.path.join(out_dir, f"{name}_{side}.txt")
+        with open(path, "w") as fh:
+            fh.write(txt)
+        print("wrote", path)
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("side", nargs="?", choices=["before", "after"])
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--out", help="directory for <name>_<side>.txt")
+    ap.add_argument("--tree", default=REPO_ROOT, help="checkout to import")
+    ap.add_argument("--sf", default="/root/testdata/sf0.001")
+    args = ap.parse_args()
+    if args.side and not (args.out and args.names):
+        ap.error("before|after needs --out DIR and at least one entry name")
+    if not args.side and (args.out or args.names):
+        ap.error("--out and entry names need a side: before|after")
+
+    out_dir = os.path.abspath(args.out) if args.out else None
+    tree = os.path.abspath(args.tree)
+    sys.path.insert(0, tree)
+    os.chdir(tree)
+    import __spark_entry__ as entrymod
+    from inmem_vector_db_spark.session import get_spark
+
+    qs = entrymod.queries()
+    if args.side:
+        dump_side(get_spark, qs, args.side, args.names, out_dir, args.sf)
+    else:
+        write_plans_md(get_spark, qs)
+    return 0
+
+
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
