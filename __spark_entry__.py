@@ -4424,112 +4424,152 @@ _BUILD_ENTRIES = {
 }
 
 
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every entry in REGISTRATION order — the canonical build-before-
+def _entries() -> dict[str, tuple]:
+    """THE entry table: ``{name: (fn, oracle)}``, the shape every
+    ``plans/*`` module uses for its ``QUERIES`` (oracle ``None`` =
+    rows-only), in REGISTRATION order — the canonical build-before-
     consumer execution order (artifact builds are registered before the
     entries that serve from them; pinned by test_entry_contract.py).
     ``queries()`` reorders this window-first for the driver; bench and
     the local gates execute in THIS order via ``exec_order()`` so cost
-    attribution is independent of which entries the window samples."""
-    from inmem_vector_db_spark.plans.packing import QUERIES as PACK
-    from inmem_vector_db_spark.plans.relational import QUERIES as REL
-    from inmem_vector_db_spark.plans.textops import QUERIES as TXT
-    from inmem_vector_db_spark.plans.tpch_extra import QUERIES as EXTRA
+    attribution is independent of which entries the window samples.
+    Adding an entry = one record here or in a plan module's QUERIES."""
+    from inmem_vector_db_spark.plans import (
+        packing, regression, relational, textops, tpch_extra,
+    )
 
     out = {
-        "knn_cosine": _knn_query("cosine"),
-        "knn_euclidean": _knn_query("euclidean"),
-        "knn_manhattan": _knn_query("manhattan"),
-        "knn_dot_product": _knn_query("dot_product"),
-        "knn_multi_cosine": _knn_multi_cosine,
-        "knn_prefilter_label": _knn_prefilter_label,
-        "knn_postfilter_parity": _knn_postfilter_parity,
-        "ann_ivf_euclidean": _ann_ivf_euclidean,
-        "ann_ivf_prefilter": _ann_ivf_prefilter,
-        "ann_ivf_multi": _ann_ivf_multi,
-        "ann_query_stream": _ann_query_stream,
-        "ann_ivf_recall": _ann_ivf_recall,
-        "retrieval_eval_metrics": _retrieval_eval_metrics,
-        "ivf_nprobe_tradeoff": _ivf_nprobe_tradeoff,
+        "knn_cosine": (_knn_query("cosine"), _knn_oracle("cosine")),
+        "knn_euclidean": (_knn_query("euclidean"), _knn_oracle("euclidean")),
+        "knn_manhattan": (_knn_query("manhattan"), _knn_oracle("manhattan")),
+        "knn_dot_product": (_knn_query("dot_product"), _knn_oracle("dot_product")),
+        "knn_multi_cosine": (_knn_multi_cosine, _KNN_MULTI_ORACLE),
+        "knn_prefilter_label": (_knn_prefilter_label, _KNN_PREFILTER_ORACLE),
+        "knn_postfilter_parity": (_knn_postfilter_parity, _KNN_POSTFILTER_ORACLE),
+        "ann_ivf_euclidean": (_ann_ivf_euclidean, _ANN_IVF_ORACLE),
+        "ann_ivf_prefilter": (_ann_ivf_prefilter, _ANN_IVF_PREFILTER_ORACLE),
+        "ann_ivf_multi": (_ann_ivf_multi, _ANN_IVF_MULTI_ORACLE),
+        "ann_query_stream": (_ann_query_stream, _ANN_QUERY_STREAM_ORACLE),
+        "ann_ivf_recall": (_ann_ivf_recall, _ANN_IVF_RECALL_ORACLE),
+        "retrieval_eval_metrics": (_retrieval_eval_metrics, _RETRIEVAL_EVAL_ORACLE),
+        "ivf_nprobe_tradeoff": (_ivf_nprobe_tradeoff, _IVF_NPROBE_TRADEOFF_ORACLE),
         # registered before ann_ivfpq: it owns the _PQ_ARTIFACTS build,
         # which must attribute to this row in exec_order
-        "pq_codebook_build": _pq_codebook_build,
-        "ann_ivfpq": _ann_ivfpq,
-        "lsh_signature_index": _lsh_signature_index,
-        "lsh_knn_cosine": _lsh_knn_cosine,
-        "lsh_knn_multiprobe": _lsh_knn_multiprobe,
-        "lsh_index_append_search": _lsh_index_append_search,
-        "lsh_index_delete_search": _lsh_index_delete_search,
-        "lsh_index_compact_stats": _lsh_index_compact_stats,
-        "store_search_pipeline": _store_search_pipeline,
-        "store_crud_lifecycle": _store_crud_lifecycle,
-        "events_hourly_stream": _events_hourly_stream,
-        "stream_static_enrich": _stream_static_enrich,
-        "stream_versioned_enrich": _stream_versioned_enrich,
-        "session_window_stream": _session_window_stream,
-        "click_purchase_stream": _click_purchase_stream,
-        "docs_dedup_stream": _docs_dedup_stream,
+        "pq_codebook_build": (_pq_codebook_build, _PQ_CODEBOOK_BUILD_ORACLE),
+        "ann_ivfpq": (_ann_ivfpq, _ANN_IVFPQ_ORACLE),
+        "lsh_signature_index": (_lsh_signature_index, _LSH_SIGNATURE_INDEX_ORACLE),
+        "lsh_knn_cosine": (_lsh_knn_cosine, _LSH_KNN_ORACLE),
+        "lsh_knn_multiprobe": (_lsh_knn_multiprobe, _LSH_MULTIPROBE_ORACLE),
+        "lsh_index_append_search": (
+            _lsh_index_append_search,
+            _lsh_search_oracle("vec_id >= 8 AND vec_id < 12"),
+        ),
+        "lsh_index_delete_search": (
+            _lsh_index_delete_search,
+            _lsh_search_oracle("vec_id < 4", "vec_id NOT IN (5, 6)"),
+        ),
+        "lsh_index_compact_stats": (
+            _lsh_index_compact_stats,
+            _lsh_signature_summary_oracle("vec_id NOT IN (5, 6)"),
+        ),
+        "store_search_pipeline": (_store_search_pipeline, _STORE_PIPELINE_ORACLE),
+        "store_crud_lifecycle": (_store_crud_lifecycle, _STORE_CRUD_ORACLE),
+        "events_hourly_stream": (_events_hourly_stream, _EVENTS_HOURLY_STREAM_ORACLE),
+        "stream_static_enrich": (_stream_static_enrich, _STREAM_STATIC_ENRICH_ORACLE),
+        "stream_versioned_enrich": (
+            _stream_versioned_enrich,
+            _STREAM_VERSIONED_ENRICH_ORACLE,
+        ),
+        "session_window_stream": (
+            _session_window_stream,
+            _SESSION_WINDOW_STREAM_ORACLE,
+        ),
+        "click_purchase_stream": (
+            _click_purchase_stream,
+            _CLICK_PURCHASE_STREAM_ORACLE,
+        ),
+        "docs_dedup_stream": (_docs_dedup_stream, _DOCS_DEDUP_STREAM_ORACLE),
         # registered before dedup_probe_stream: the standing corpus
         # signature index it probes is dedup_signature_index's build
-        # (dict.update below keeps this early position when the textops
-        # merge re-registers the same key)
-        "dedup_signature_index": TXT["dedup_signature_index"][0],
-        "dedup_probe_stream": _dedup_probe_stream,
-        "jsonl_source_agg": _jsonl_source_agg,
-        "rest_feed_source_agg": _rest_feed_source_agg,
-        "feed_tail_stream": _feed_tail_stream,
-        "orc_source_agg": _orc_source_agg,
-        "csv_source_agg": _csv_source_agg,
-        "partitioned_write_roundtrip": _partitioned_write_roundtrip,
-        "schema_evolution_roundtrip": _schema_evolution_roundtrip,
-        "compaction_roundtrip": _compaction_roundtrip,
-        "snapshot_time_travel": _snapshot_time_travel,
-        "user_distinct_stream": _user_distinct_stream,
-        "value_histogram_stream": _value_histogram_stream,
-        "user_totals_stateful_stream": _user_totals_stateful_stream,
-        "stream_file_sink_roundtrip": _stream_file_sink_roundtrip,
-        "image_pixel_stats": _image_pixel_stats,
-        "image_phash_dups": _image_phash_dups,
-        "video_frame_sample": _video_frame_sample,
-        "video_scene_cuts": _video_scene_cuts,
-        "audio_meta_stats": _audio_meta_stats,
-        "audio_energy_stats": _audio_energy_stats,
-        "image_resize_roundtrip": _image_resize_roundtrip,
-        "store_parity_search": _store_parity_search,
-        "knn_quantized": _knn_quantized,
-        "knn_pq": _knn_pq,
-        "ann_ivfpq_recall": _ann_ivfpq_recall,
-        "knn_quantized_recall": _knn_quantized_recall,
-        "ann_truncated_recall": _ann_truncated_recall,
-        "rp_projection_index": _rp_projection_index,
-        "rp_knn_recall": _rp_knn_recall,
-        "rp_distortion_stats": _rp_distortion_stats,
-        "contrastive_pair_mining": _contrastive_pair_mining,
-        "ann_ivf_index_build": _ann_ivf_index_build,
-        "ann_ivf_partitioned": _ann_ivf_partitioned,
-        "kmeans_embeddings": _kmeans_embeddings,
-        "ann_ivf_kmeans_recall": _ann_ivf_kmeans_recall,
-        "ann_ivf_append_search": _ann_ivf_append_search,
-        "ann_ivf_rebuild_search": _ann_ivf_rebuild_search,
-        "ann_ivf_merge_search": _ann_ivf_merge_search,
-        "ann_index_stream_append": _ann_index_stream_append,
-        "ann_ivf_delete_search": _ann_ivf_delete_search,
-        "incremental_signature_stream": _incremental_signature_stream,
-        "label_centroids": _label_centroids,
+        # (the plan-table merge below keeps this early position when
+        # textops re-registers the same key)
+        "dedup_signature_index": textops.QUERIES["dedup_signature_index"],
+        "dedup_probe_stream": (_dedup_probe_stream, _DEDUP_PROBE_STREAM_ORACLE),
+        "jsonl_source_agg": (_jsonl_source_agg, _DOCS_AGG_ORACLE),
+        "rest_feed_source_agg": (_rest_feed_source_agg, _REST_FEED_ORACLE),
+        "feed_tail_stream": (_feed_tail_stream, _DOCS_AGG_ORACLE),
+        "orc_source_agg": (_orc_source_agg, _DOCS_AGG_ORACLE),
+        "csv_source_agg": (_csv_source_agg, _DOCS_AGG_ORACLE),
+        "partitioned_write_roundtrip": (_partitioned_write_roundtrip, _DOCS_AGG_ORACLE),
+        "schema_evolution_roundtrip": (
+            _schema_evolution_roundtrip,
+            _SCHEMA_EVOLUTION_ORACLE,
+        ),
+        "compaction_roundtrip": (_compaction_roundtrip, _DOCS_AGG_ORACLE),
+        "snapshot_time_travel": (_snapshot_time_travel, _SNAPSHOT_TIME_TRAVEL_ORACLE),
+        "user_distinct_stream": (_user_distinct_stream, _USER_DISTINCT_STREAM_ORACLE),
+        "value_histogram_stream": (
+            _value_histogram_stream,
+            _VALUE_HISTOGRAM_STREAM_ORACLE,
+        ),
+        "user_totals_stateful_stream": (
+            _user_totals_stateful_stream,
+            _USER_TOTALS_STATEFUL_ORACLE,
+        ),
+        "stream_file_sink_roundtrip": (
+            _stream_file_sink_roundtrip,
+            _STREAM_FILE_SINK_ORACLE,
+        ),
+        "image_pixel_stats": (_image_pixel_stats, _IMAGE_PIXEL_ORACLE),
+        "image_phash_dups": (_image_phash_dups, _IMAGE_PHASH_ORACLE),
+        "video_frame_sample": (_video_frame_sample, _VIDEO_FRAME_ORACLE),
+        "video_scene_cuts": (_video_scene_cuts, _VIDEO_SCENE_CUTS_ORACLE),
+        "audio_meta_stats": (_audio_meta_stats, _AUDIO_STATS_ORACLE),
+        "audio_energy_stats": (_audio_energy_stats, _AUDIO_ENERGY_ORACLE),
+        "image_resize_roundtrip": (_image_resize_roundtrip, _IMAGE_RESIZE_ORACLE),
+        "store_parity_search": (_store_parity_search, _STORE_PARITY_ORACLE),
+        "knn_quantized": (_knn_quantized, _KNN_QUANTIZED_ORACLE),
+        "knn_pq": (_knn_pq, _KNN_PQ_ORACLE),
+        "ann_ivfpq_recall": (_ann_ivfpq_recall, _ANN_IVFPQ_RECALL_ORACLE),
+        "knn_quantized_recall": (_knn_quantized_recall, _KNN_QUANTIZED_RECALL_ORACLE),
+        "ann_truncated_recall": (_ann_truncated_recall, _ANN_TRUNCATED_RECALL_ORACLE),
+        "rp_projection_index": (_rp_projection_index, _rp_projection_index_oracle()),
+        "rp_knn_recall": (_rp_knn_recall, _rp_recall_oracle()),
+        "rp_distortion_stats": (_rp_distortion_stats, _rp_distortion_oracle()),
+        "contrastive_pair_mining": (_contrastive_pair_mining, _CONTRASTIVE_PAIR_ORACLE),
+        "ann_ivf_index_build": (_ann_ivf_index_build, _ANN_IVF_INDEX_BUILD_ORACLE),
+        "ann_ivf_partitioned": (_ann_ivf_partitioned, _ANN_IVF_ORACLE),
+        "kmeans_embeddings": (_kmeans_embeddings, _KMEANS_EMB_ORACLE),
+        "ann_ivf_kmeans_recall": (
+            _ann_ivf_kmeans_recall,
+            _ANN_IVF_KMEANS_RECALL_ORACLE,
+        ),
+        "ann_ivf_append_search": (_ann_ivf_append_search, _ANN_IVF_APPEND_ORACLE),
+        "ann_ivf_rebuild_search": (_ann_ivf_rebuild_search, _ANN_IVF_REBUILD_ORACLE),
+        "ann_ivf_merge_search": (_ann_ivf_merge_search, _ANN_IVF_MERGE_ORACLE),
+        "ann_index_stream_append": (
+            _ann_index_stream_append,
+            _ANN_INDEX_STREAM_APPEND_ORACLE,
+        ),
+        "ann_ivf_delete_search": (_ann_ivf_delete_search, _ANN_IVF_DELETE_ORACLE),
+        "incremental_signature_stream": (
+            _incremental_signature_stream,
+            textops.DEDUP_MINHASH_SQL,
+        ),
+        "label_centroids": (_label_centroids, _LABEL_CENTROIDS_ORACLE),
     }
-    from inmem_vector_db_spark.plans.regression import QUERIES as REG
-
-    out.update({name: fn for name, (fn, _sql) in REL.items()})
-    out.update({name: fn for name, (fn, _sql) in TXT.items()})
-    out.update({name: fn for name, (fn, _sql) in EXTRA.items()})
-    out.update({name: fn for name, (fn, _sql) in PACK.items()})
-    out.update({name: fn for name, (fn, _sql) in REG.items()})
+    for mod in (relational, textops, tpch_extra, packing, regression):
+        out.update(mod.QUERIES)
     return out
 
 
+def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: fn for name, (fn, _oracle) in _entries().items()}
+
+
 def exec_order() -> list[str]:
-    """Names in build-before-consumer execution order (see _registry)."""
-    return list(_registry())
+    """Names in build-before-consumer execution order (see _entries)."""
+    return list(_entries())
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -4543,98 +4583,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from inmem_vector_db_spark.plans.relational import QUERIES as REL
-
-    out = {
-        "knn_cosine": _knn_oracle("cosine"),
-        "knn_euclidean": _knn_oracle("euclidean"),
-        "knn_manhattan": _knn_oracle("manhattan"),
-        "knn_dot_product": _knn_oracle("dot_product"),
-        "knn_multi_cosine": _KNN_MULTI_ORACLE,
-        "knn_prefilter_label": _KNN_PREFILTER_ORACLE,
-        "knn_postfilter_parity": _KNN_POSTFILTER_ORACLE,
-        "ann_ivf_euclidean": _ANN_IVF_ORACLE,
-        "ann_ivf_prefilter": _ANN_IVF_PREFILTER_ORACLE,
-        "ann_ivf_multi": _ANN_IVF_MULTI_ORACLE,
-        "ann_query_stream": _ANN_QUERY_STREAM_ORACLE,
-        "ann_ivf_recall": _ANN_IVF_RECALL_ORACLE,
-        "retrieval_eval_metrics": _RETRIEVAL_EVAL_ORACLE,
-        "ivf_nprobe_tradeoff": _IVF_NPROBE_TRADEOFF_ORACLE,
-        "ann_ivfpq": _ANN_IVFPQ_ORACLE,
-        "lsh_signature_index": _LSH_SIGNATURE_INDEX_ORACLE,
-        "lsh_knn_cosine": _LSH_KNN_ORACLE,
-        "lsh_knn_multiprobe": _LSH_MULTIPROBE_ORACLE,
-        "lsh_index_append_search": _lsh_search_oracle("vec_id >= 8 AND vec_id < 12"),
-        "lsh_index_delete_search": _lsh_search_oracle(
-            "vec_id < 4", "vec_id NOT IN (5, 6)"
-        ),
-        "lsh_index_compact_stats": _lsh_signature_summary_oracle(
-            "vec_id NOT IN (5, 6)"
-        ),
-        "pq_codebook_build": _PQ_CODEBOOK_BUILD_ORACLE,
-        "store_search_pipeline": _STORE_PIPELINE_ORACLE,
-        "store_crud_lifecycle": _STORE_CRUD_ORACLE,
-        "events_hourly_stream": _EVENTS_HOURLY_STREAM_ORACLE,
-        "stream_static_enrich": _STREAM_STATIC_ENRICH_ORACLE,
-        "stream_versioned_enrich": _STREAM_VERSIONED_ENRICH_ORACLE,
-        "session_window_stream": _SESSION_WINDOW_STREAM_ORACLE,
-        "click_purchase_stream": _CLICK_PURCHASE_STREAM_ORACLE,
-        "docs_dedup_stream": _DOCS_DEDUP_STREAM_ORACLE,
-        "dedup_probe_stream": _DEDUP_PROBE_STREAM_ORACLE,
-        "user_distinct_stream": _USER_DISTINCT_STREAM_ORACLE,
-        "value_histogram_stream": _VALUE_HISTOGRAM_STREAM_ORACLE,
-        "user_totals_stateful_stream": _USER_TOTALS_STATEFUL_ORACLE,
-        "stream_file_sink_roundtrip": _STREAM_FILE_SINK_ORACLE,
-        "jsonl_source_agg": _DOCS_AGG_ORACLE,
-        "rest_feed_source_agg": _REST_FEED_ORACLE,
-        "feed_tail_stream": _DOCS_AGG_ORACLE,
-        "orc_source_agg": _DOCS_AGG_ORACLE,
-        "csv_source_agg": _DOCS_AGG_ORACLE,
-        "partitioned_write_roundtrip": _DOCS_AGG_ORACLE,
-        "schema_evolution_roundtrip": _SCHEMA_EVOLUTION_ORACLE,
-        "compaction_roundtrip": _DOCS_AGG_ORACLE,
-        "snapshot_time_travel": _SNAPSHOT_TIME_TRAVEL_ORACLE,
-        "image_pixel_stats": _IMAGE_PIXEL_ORACLE,
-        "image_phash_dups": _IMAGE_PHASH_ORACLE,
-        "video_frame_sample": _VIDEO_FRAME_ORACLE,
-        "video_scene_cuts": _VIDEO_SCENE_CUTS_ORACLE,
-        "audio_meta_stats": _AUDIO_STATS_ORACLE,
-        "audio_energy_stats": _AUDIO_ENERGY_ORACLE,
-        "image_resize_roundtrip": _IMAGE_RESIZE_ORACLE,
-        "store_parity_search": _STORE_PARITY_ORACLE,
-        "knn_quantized": _KNN_QUANTIZED_ORACLE,
-        "knn_pq": _KNN_PQ_ORACLE,
-        "ann_ivfpq_recall": _ANN_IVFPQ_RECALL_ORACLE,
-        "knn_quantized_recall": _KNN_QUANTIZED_RECALL_ORACLE,
-        "ann_truncated_recall": _ANN_TRUNCATED_RECALL_ORACLE,
-        "rp_projection_index": _rp_projection_index_oracle(),
-        "rp_knn_recall": _rp_recall_oracle(),
-        "rp_distortion_stats": _rp_distortion_oracle(),
-        "contrastive_pair_mining": _CONTRASTIVE_PAIR_ORACLE,
-        "ann_ivf_index_build": _ANN_IVF_INDEX_BUILD_ORACLE,
-        "ann_ivf_partitioned": _ANN_IVF_ORACLE,
-        "kmeans_embeddings": _KMEANS_EMB_ORACLE,
-        "ann_ivf_kmeans_recall": _ANN_IVF_KMEANS_RECALL_ORACLE,
-        "ann_ivf_append_search": _ANN_IVF_APPEND_ORACLE,
-        "ann_ivf_rebuild_search": _ANN_IVF_REBUILD_ORACLE,
-        "ann_ivf_merge_search": _ANN_IVF_MERGE_ORACLE,
-        "ann_index_stream_append": _ANN_INDEX_STREAM_APPEND_ORACLE,
-        "ann_ivf_delete_search": _ANN_IVF_DELETE_ORACLE,
-        "label_centroids": _LABEL_CENTROIDS_ORACLE,
-    }
-    from inmem_vector_db_spark.plans.textops import DEDUP_MINHASH_SQL
-
-    out["incremental_signature_stream"] = DEDUP_MINHASH_SQL
-    out.update({name: sql for name, (_fn, sql) in REL.items()})
-    from inmem_vector_db_spark.plans.textops import QUERIES as TXT
-    from inmem_vector_db_spark.plans.tpch_extra import QUERIES as EXTRA
-
-    out.update({name: sql for name, (_fn, sql) in TXT.items() if sql is not None})
-    out.update({name: sql for name, (_fn, sql) in EXTRA.items()})
-    from inmem_vector_db_spark.plans.packing import QUERIES as PACK
-
-    out.update({name: sql for name, (_fn, sql) in PACK.items()})
-    from inmem_vector_db_spark.plans.regression import QUERIES as REG
-
-    out.update({name: sql for name, (_fn, sql) in REG.items()})
-    return out
+    return {name: sql for name, (_fn, sql) in _entries().items() if sql is not None}

@@ -232,6 +232,19 @@ def write_ivf_index(
     _write_lists(assigned.repartition(n_write, "cluster_id"), path, "overwrite")
 
 
+def _read_centroids(spark, path: str) -> tuple[list, np.ndarray]:
+    """The artifact's ``(cids, cmat)``, sorted by cid: ivf_assign and
+    probe_lists break exact-distance ties by matrix position ("centroids
+    are sorted by id"), so an unordered parquet collect could route a
+    tied vector differently than the original build (and than the
+    DuckDB oracle's min-struct)."""
+    crows = sorted(
+        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["cid"]
+    )
+    cids = [r["cid"] for r in crows]
+    return cids, np.asarray([list(r["centroid"]) for r in crows], dtype=np.float64)
+
+
 def append_ivf_index(
     batch: DataFrame,
     path: str,
@@ -248,16 +261,7 @@ def append_ivf_index(
     warrants an explicit retrain + rewrite (the rebuild job), while the
     steady-state ingest path must keep probe routing stable so readers
     never see vectors assigned under two different centroid sets."""
-    spark = batch.sparkSession
-    # sort by cid: ivf_assign breaks exact-distance ties by matrix
-    # position and documents "centroids are sorted by id" — an unordered
-    # parquet collect could otherwise route a tied append differently
-    # than the original build (and than the DuckDB oracle's min-struct)
-    crows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["cid"]
-    )
-    cids = [r["cid"] for r in crows]
-    cmat = np.asarray([list(r["centroid"]) for r in crows], dtype=np.float64)
+    cids, cmat = _read_centroids(batch.sparkSession, path)
     assigned = ivf_assign(batch, cids, cmat, id_col, vec_col)
     _write_lists(assigned, path, "append")
 
@@ -451,12 +455,7 @@ def ivf_search_indexed(
     read the (bounded) centroid table, pick the ``nprobe`` nearest lists
     driver-side, scan ONLY those ``cluster_id=`` partitions (partition
     pruning — plan-pinned in tests), exact top-k inside them."""
-    # sorted for deterministic tie-breaks, same contract as append
-    crows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["cid"]
-    )
-    cids = [r["cid"] for r in crows]
-    cmat = np.asarray([list(r["centroid"]) for r in crows], dtype=np.float64)
+    cids, cmat = _read_centroids(spark, path)
     probe = probe_lists(cids, cmat, query_vec, nprobe)
     vecs = spark.read.parquet(f"{path}/vectors").filter(
         F.col("cluster_id").isin(probe)

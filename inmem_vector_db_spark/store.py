@@ -38,7 +38,11 @@ from pyspark.sql import functions as F
 
 from inmem_vector_db_spark.functions.distance import distance
 from inmem_vector_db_spark.functions.localframe import literal_df
-from inmem_vector_db_spark.sources.embedding import DEFAULT_DIM, with_embeddings
+from inmem_vector_db_spark.sources.embedding import (
+    DEFAULT_DIM,
+    hash_embedding_expr,
+    with_embeddings,
+)
 
 LIBRARIES_SCHEMA = (
     "library_id string, name string, indexer_type string, "
@@ -410,10 +414,14 @@ class LibraryStore:
         if text is not None:
             if not text.strip():
                 raise ValidationError("chunk text must be non-empty")
-            untouched = df.filter(~hit)
-            changed = df.filter(hit).withColumn("text", F.lit(text)).drop("embedding")
-            changed = with_embeddings(changed, text_col="text", dim=self.dim)
-            df = untouched.unionByName(changed.select(*self.chunks.columns))
+            # projections only, no filter + union: a union would double
+            # the chunks lineage on every text update
+            df = df.withColumn("text", F.when(hit, F.lit(text)).otherwise(F.col("text")))
+            df = df.withColumn(
+                "embedding",
+                F.when(hit, hash_embedding_expr("text", self.dim))
+                .otherwise(F.col("embedding")),
+            )
         self.chunks = df
 
     def delete_chunks(self, chunk_ids: Sequence[str]) -> None:

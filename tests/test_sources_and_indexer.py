@@ -1,4 +1,4 @@
-"""Index strategy interface, CSV chunk source, embedding cache."""
+"""Sources: CSV chunks, embedding cache, feeds, table maintenance."""
 
 from __future__ import annotations
 
@@ -6,54 +6,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from inmem_vector_db_spark.operators.indexer import FlatIndex, LSHIndex, make_index
 from inmem_vector_db_spark.sources.embedding import EmbeddingCache, hash_embed_texts
 from inmem_vector_db_spark.sources.loader import load_chunk_csv, load_table
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    df.count()
-    return df
-
-
-@pytest.fixture(scope="module")
-def queries(emb):
-    return emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-
-def test_make_index_dispatch():
-    assert isinstance(make_index("flat", 64), FlatIndex)
-    assert isinstance(make_index("lsh", 64, num_tables=2), LSHIndex)
-    with pytest.raises(ValueError, match="hnsw"):
-        make_index("hnsw", 64)
-
-
-def test_flat_and_lsh_agree_on_exact_neighbors(emb, queries):
-    """LSH with wide buckets + exact fallback returns the same top-k sets
-    as the flat scan on this corpus."""
-    flat = FlatIndex()
-    assert flat.build(emb) is None
-    exact = flat.search(emb, queries, k=5, metric="cosine").collect()
-
-    lsh = make_index("lsh", 64, num_tables=20, hash_size=4)
-    idx = lsh.build(emb)
-    assert idx is not None and idx.count() == emb.count() * 20
-    approx = lsh.search(emb, queries, k=5, metric="cosine").collect()
-
-    def sets(rows):
-        out = {}
-        for r in rows:
-            out.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return out
-
-    e, a = sets(exact), sets(approx)
-    # recall over 3 queries x 5 results with wide buckets: allow 1 miss
-    hits = sum(len(e[q] & a.get(q, set())) for q in e)
-    assert hits >= 14
 
 
 def test_csv_source(spark, tmp_path):

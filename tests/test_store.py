@@ -77,6 +77,8 @@ def test_create_and_stats(populated):
 def test_validation_errors(spark, store):
     with pytest.raises(ValidationError):
         store.create_library("   ")
+    with pytest.raises(ValidationError):  # HNSW is deliberately absent
+        store.create_library("x", indexer_type="hnsw")
     lid = store.create_library("ok")
     with pytest.raises(ValidationError):
         store.add_documents(lid, spark.createDataFrame([("",)], "title string"))
@@ -190,6 +192,28 @@ def test_update_chunk_reembeds_and_moves(spark, populated):
     assert new["tags"] == ["x"]
     assert new["created_at"] == chunk["created_at"]  # preserved
 
+
+
+def test_sequential_text_updates_keep_lineage_flat(populated):
+    """A text update is one projection: eight in a row leave the chunks
+    plan with as many leaf relations as before (a filter + union per
+    update would double them each time)."""
+    import pandas as pd
+
+    store, _, _ = populated
+
+    def leaves():
+        return store.chunks._jdf.queryExecution().analyzed().collectLeaves().size()
+
+    before, n = leaves(), store.chunks.count()
+    cid = store.chunks.filter(F.col("text") == "successor to hubble").head()["chunk_id"]
+    for i in range(8):
+        store.update_chunk(cid, text=f"revision {i}")
+    assert leaves() == before
+    assert store.chunks.count() == n
+    row = store.chunks.filter(F.col("chunk_id") == cid).head()
+    assert row["text"] == "revision 7"
+    assert row["embedding"] == hash_embed_texts(pd.Series(["revision 7"]))[0]
 
 def test_delete_cascades(populated):
     store, lid, dids = populated

@@ -45,29 +45,13 @@ def main() -> int:
 
     spark = get_spark("ab_probe")
     spark.sparkContext.setLogLevel("ERROR")
-    # same steady-state warmup policy as bench.py: parquet footers, the
-    # heavy codegen families on the tiny corpus, and every memoized
-    # query-vector fetch — so first-call timings measure the entry, not
-    # first-touch JIT (and both trees start from the identical state)
-    spark.read.parquet(f"{args.sf}/embeddings.parquet").count()
+    # bench.py's warmup, imported from the probed tree, so first-call
+    # timings measure the entry, not first-touch JIT (and both trees
+    # start from the identical state)
     try:
-        from inmem_vector_db_spark.operators.signatures import (
-            text_signature_index,
-        )
+        from bench import warmup
 
-        tiny = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        text_signature_index(tiny).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        from inmem_vector_db_spark.operators.knn import knn
-
-        tiny_emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        )
-        qv = [float(x) for x in tiny_emb.limit(1).collect()[0]["embedding"]]
-        knn(tiny_emb, qv, k=3, metric="cosine").collect()
-        for vid in entrymod.query_vec_ids():
-            entrymod._query_vec(spark, args.sf, vid)
+        warmup(spark, args.sf)
         warmup_failed = None
     except Exception as exc:  # a cold tree breaks the A/B premise —
         # record it so cross-tree comparisons can be invalidated

@@ -1,8 +1,9 @@
 """Per-entry job profile: where does each bench row's wall time go?
 
-Runs entries exactly like bench.py (same session factory, same warmup,
-same exec_order, same ``collect()`` action) but with the Spark event
-log enabled and every entry labelled via ``setJobDescription``.  Then
+Runs entries exactly like bench.py (same session factory, same
+``bench.warmup``, same exec_order, same ``collect()`` action) but with
+the Spark event log enabled (in a temporary directory, removed once
+parsed) and every entry labelled via ``setJobDescription``.  Then
 parses the event log and attributes, per entry:
 
   - jobs:        number of Spark jobs the entry triggered
@@ -28,16 +29,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import warmup  # noqa: E402
 from inmem_vector_db_spark.session import get_spark  # noqa: E402
-
-EVDIR = "/tmp/r13_eventlog"
 
 
 def main() -> int:
@@ -49,38 +51,28 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    os.makedirs(EVDIR, exist_ok=True)
+    evdir = tempfile.mkdtemp(prefix="job_profile_eventlog_")
+    try:
+        return profile(args.sf, args.names, evdir)
+    finally:
+        shutil.rmtree(evdir, ignore_errors=True)
+
+
+def profile(sf_dir: str, names: list[str], evdir: str) -> int:
     spark = get_spark("job_profile", extra_conf={
         "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": EVDIR,
+        "spark.eventLog.dir": evdir,
         "spark.eventLog.compress": "false",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    sf_dir = args.sf
 
-    # bench.py warmup, verbatim in effect
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     try:
-        from inmem_vector_db_spark.operators.signatures import (
-            text_signature_index,
-        )
-
-        tiny = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        text_signature_index(tiny).write.format("noop").mode(
-            "overwrite").save()
-        from inmem_vector_db_spark.operators.knn import knn
-
-        tiny_emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet")
-        qv = [float(x) for x in tiny_emb.limit(1).collect()[0]["embedding"]]
-        knn(tiny_emb, qv, k=3, metric="cosine").collect()
-        for vid in entrymod.query_vec_ids():
-            entrymod._query_vec(spark, sf_dir, vid)
+        warmup(spark, sf_dir)
     except Exception:
-        pass
+        pass  # best-effort, as in bench.py
 
     qmap = entrymod.queries()
-    wanted = args.names or entrymod.exec_order()
+    wanted = names or entrymod.exec_order()
     walls: dict[str, float] = {}
     order = [n for n in entrymod.exec_order() if n in set(wanted)]
     for name in order:
@@ -100,8 +92,8 @@ def main() -> int:
     # parse the event log (Spark 4 may write a rolling dir
     # eventlog_v2_<appId>/events_* or a single file <appId>)
     paths: list[str] = []
-    flat = os.path.join(EVDIR, app_id)
-    v2 = os.path.join(EVDIR, f"eventlog_v2_{app_id}")
+    flat = os.path.join(evdir, app_id)
+    v2 = os.path.join(evdir, f"eventlog_v2_{app_id}")
     if os.path.isfile(flat):
         paths = [flat]
     elif os.path.isdir(v2):
