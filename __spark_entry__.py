@@ -2952,10 +2952,10 @@ def _store_crud_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = LibraryStore(spark)
     lid = store.create_library("lifecycle", tags=["main"])
 
-    # literal_df (r14): LocalRelation-planned input opts into the
-    # store's driver-side metadata fast path — the old
-    # createDataFrame(list) form planned as a pickled RDD whose
-    # checkpoint+validation cost a 1.4 s Python-lane job (profiled)
+    # literal_df: add_documents collects its batch, and a
+    # LocalRelation collects driver-side with no job — a
+    # createDataFrame(list) input is a pickled RDD whose collect runs a
+    # Python-lane job
     added = store.add_documents(
         lid, literal_df(spark, [("keep",), ("drop",), ("aux",)], "title string")
     )

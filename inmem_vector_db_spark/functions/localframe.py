@@ -24,8 +24,8 @@ Exactness: the DDL schema is applied by the Arrow conversion, so
 dtypes match ``createDataFrame(rows, schema)`` column for column;
 floats cross as binary doubles (no text round trip).  One divergence:
 a Python ``float('nan')`` becomes NULL here (pandas/Arrow object-column
-semantics), where the parallelize path keeps a NaN double — don't
-route NaN-bearing columns through this helper.
+semantics), where the parallelize path keeps a NaN double — so a NaN
+value, or one inside a list/tuple cell, raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -36,6 +36,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 __all__ = ["literal_df"]
+
+
+def _has_nan(rows: Sequence) -> bool:
+    """A float NaN in ``rows``: a value, or an element of a list/tuple
+    cell."""
+    for r in rows:
+        for v in r:
+            if isinstance(v, float):
+                if v != v:
+                    return True
+            elif isinstance(v, (list, tuple)):
+                if any(isinstance(x, float) and x != x for x in v):
+                    return True
+    return False
 
 
 def literal_df(
@@ -71,16 +85,15 @@ def literal_df(
     # NaN guard (r13 advisor): the pandas/Arrow object-column path
     # converts float('nan') to NULL, silently diverging from the
     # parallelize path's NaN double — fail loudly instead of shipping
-    # the divergence into a plan
-    for r in rows:
-        for v in r:
-            if isinstance(v, float) and v != v:
-                raise ValueError(
-                    "literal_df: float('nan') in literal rows would "
-                    "become NULL via the Arrow conversion; keep NaN "
-                    "out of driver-literal tables (or encode it "
-                    "explicitly as None)"
-                )
+    # the divergence into a plan.  Array cells (centroids, embedding
+    # batches) are checked one level down.
+    if _has_nan(rows):
+        raise ValueError(
+            "literal_df: float('nan') in literal rows would "
+            "become NULL via the Arrow conversion; keep NaN "
+            "out of driver-literal tables (or encode it "
+            "explicitly as None)"
+        )
     # dtype=object keeps ints exact (no silent float64 widening for
     # null-bearing columns) — the Arrow conversion casts each column to
     # the declared type from the objects directly

@@ -1,5 +1,5 @@
 """Library -> Document -> Chunk store: the reference's data model and its
-CRUD surface re-expressed as DataFrame batch jobs (SURVEY.md 1.4, 2.8).
+CRUD surface re-expressed over Spark (SURVEY.md 1.4, 2.8).
 
 Reference shape: three Pydantic entity types in process-global dicts with
 per-indexer locks, pickled per-library on every mutation
@@ -7,19 +7,26 @@ per-indexer locks, pickled per-library on every mutation
 
 * each entity type is a **table** (libraries / documents / chunks) with
   the §1.4 schema — metadata flattened into typed columns;
-* the store holds **immutable DataFrames**; every mutation is a pure
+* libraries and documents are **driver-side catalogs**, as in the
+  reference: one ``{id: row}`` dict each is the table of record, every
+  mutation is a dict operation that runs no Spark job, and the table
+  reads as a DataFrame (one LocalRelation, built on the first read after
+  a mutation).  They must fit in driver memory anyway: ``add_chunks``
+  and ``search`` broadcast the documents table;
+* chunks are **immutable DataFrames**; every chunk mutation is a pure
   transformation producing the next version (no locks — the reference's
   ``threading.Lock``/``asyncio.Lock`` machinery has no Spark analog
   because nothing is shared-mutable);
 * persistence = parquet round-trip (``save``/``load``), replacing pickle
   save/load (``library.py:120-144``, S1-S3).  On a cluster these are
-  partitioned tables (``partitionBy("library_id")``) and the mutations
-  become Delta ``MERGE``/``DELETE`` — same logical plans, ACID commit.
+  partitioned tables (``partitionBy("library_id")``) and the chunk
+  mutations become Delta ``MERGE``/``DELETE`` — same logical plans, ACID
+  commit.
 
 Validation (reference P6, ``chunk.py:25-71`` etc.) happens at ingest:
 non-empty name/title/text, deduped non-empty tags, ``page >= 0``,
-non-empty 1-D embedding — enforced as column expressions, failing the
-batch loudly rather than silently dropping rows.
+non-empty 1-D embedding — failing the batch loudly rather than silently
+dropping rows.
 
 Known reference bugs NOT reproduced (SURVEY.md 7.4): the batch-add
 cross-document chunk-list pollution (``library.py:107``) and the
@@ -35,14 +42,11 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from inmem_vector_db_spark.functions.distance import distance
 from inmem_vector_db_spark.functions.localframe import literal_df
-from inmem_vector_db_spark.sources.embedding import (
-    DEFAULT_DIM,
-    hash_embedding_expr,
-    with_embeddings,
-)
+from inmem_vector_db_spark.sources.embedding import DEFAULT_DIM, hash_embedding_expr
 
 LIBRARIES_SCHEMA = (
     "library_id string, name string, indexer_type string, "
@@ -75,6 +79,12 @@ def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
+def _clean_tag_list(tags: Sequence[str] | None) -> list[str]:
+    """Driver-side ``LibraryStore._clean_tags``: drop blank tags, dedup
+    keeping the first occurrence (reference ``chunk.py:25-34``)."""
+    return list(dict.fromkeys(t for t in tags or () if t and t.strip()))
+
+
 def tags_superset(tag_col, required: Sequence[str]):
     """ALL-match tag predicate (reference P2): every requested tag must be
     in the row's tags (``library_service.py:207-215``)."""
@@ -82,32 +92,61 @@ def tags_superset(tag_col, required: Sequence[str]):
     return F.size(F.array_except(req, F.coalesce(tag_col, F.array()))) == 0
 
 
+def _catalog_table(name: str, schema: str) -> property:
+    """A driver-side catalog read as a DataFrame.  The first read after a
+    mutation builds one LocalRelation from the ``{id: row}`` dict (a
+    Union of LocalRelations has no fold rule, so the view is never
+    grown by unions); assigning a DataFrame rebuilds the dict from its
+    rows."""
+
+    def read(store: LibraryStore) -> DataFrame:
+        view = store._views.get(name)
+        if view is None:
+            rows = [tuple(r.values()) for r in store._rows[name].values()]
+            view = store._views[name] = literal_df(store.spark, rows, schema)
+        return view
+
+    def assign(store: LibraryStore, df: DataFrame) -> None:
+        # by name: a partitioned snapshot reads back with library_id last
+        cols = StructType.fromDDL(schema).fieldNames()
+        store._rows[name] = {r[0]: r.asDict() for r in df.select(*cols).collect()}
+        store._views.pop(name, None)
+
+    return property(read, assign)
+
+
 class ValidationError(ValueError):
     pass
 
 
 class LibraryStore:
-    """In-memory-DataFrame store with explicit parquet persistence —
-    the Spark analog of the reference's global dict + pickle files."""
+    """Driver-side catalogs and a chunks DataFrame with explicit parquet
+    persistence — the Spark analog of the reference's global dict +
+    pickle files."""
+
+    libraries = _catalog_table("libraries", LIBRARIES_SCHEMA)
+    documents = _catalog_table("documents", DOCUMENTS_SCHEMA)
 
     def __init__(self, spark: SparkSession, dim: int = DEFAULT_DIM) -> None:
         self.spark = spark
         self.dim = dim
-        # TRUE empty LocalRelations (r14: via literal_df — a bare
+        # {id: row dict in schema column order}, insertion-ordered
+        self._rows: dict[str, dict[str, dict]] = {"libraries": {}, "documents": {}}
+        self._views: dict[str, DataFrame] = {}
+        # a TRUE empty LocalRelation (r14: via literal_df — a bare
         # createDataFrame([], schema) is a LogicalRDD, which
         # PropagateEmptyRelation cannot prove empty, so unions built on
         # it never folded and every metadata head() escalated through
-        # take-jobs): Catalyst prunes these out of every union, so the
-        # empty bases cost nothing (wrapping them in
-        # coalesce/repartition would BLOCK that rule and measurably
-        # regress the whole mutation family)
-        self.libraries = literal_df(spark, [], LIBRARIES_SCHEMA)
-        self.documents = literal_df(spark, [], DOCUMENTS_SCHEMA)
+        # take-jobs): Catalyst prunes it out of every union, so the
+        # empty base costs nothing (wrapping it in coalesce/repartition
+        # would BLOCK that rule and measurably regress the whole
+        # mutation family)
         self.chunks = literal_df(spark, [], CHUNKS_SCHEMA)
-        # driver-side catalog of known library ids: existence checks are
-        # dict lookups in the reference (``dependencies.py:14``) and must
-        # not cost a distributed job here either
-        self._library_ids: set[str] = set()
+
+    def _catalog(self, name: str) -> dict[str, dict]:
+        """The ``name`` catalog, for a mutation: its cached view goes."""
+        self._views.pop(name, None)
+        return self._rows[name]
 
     # -- persistence (S1-S3) ---------------------------------------------
 
@@ -132,16 +171,17 @@ class LibraryStore:
             path = os.path.join(root, name)
             if os.path.exists(path):
                 setattr(store, name, spark.read.parquet(path))
-        store._library_ids = {
-            r["library_id"] for r in store.libraries.select("library_id").collect()
-        }
         return store
 
     # -- validation helpers ------------------------------------------------
 
     def _require_library(self, library_id: str) -> None:
-        if library_id not in self._library_ids:
+        if library_id not in self._rows["libraries"]:
             raise KeyError(f"library {library_id} not found")  # P5 404 analog
+
+    def _require_document(self, document_id: str) -> None:
+        if document_id not in self._rows["documents"]:
+            raise KeyError(f"document {document_id} not found")
 
     @staticmethod
     def _clean_tags(col):
@@ -162,31 +202,11 @@ class LibraryStore:
             raise ValidationError("library name must be non-empty")  # library.py:45-49
         if indexer_type not in INDEXER_TYPES:
             raise ValidationError(f"indexer_type must be one of {INDEXER_TYPES}")
-        lid = _new_id()
-        ts = _now()
-        # literal_df (r14): the library row is driver-literal, so it
-        # plans as a LocalRelation — metadata reads over the libraries
-        # table (existence probes, the M8 created_at checks) then fold
-        # driver-side instead of escalating head() through 4 take-jobs
-        # of pickled-RDD scans (profiled: ~1 s per head at bench scale)
-        new_row = (lid, name, indexer_type, ts, ts,
-                   list(dict.fromkeys(t for t in tags if t.strip())))
-        # keep the catalog a SINGLE LocalRelation (a Union of
-        # LocalRelations has no fold rule, so heads/existence probes
-        # over it still launch take-jobs); merging driver-side is
-        # size-safe because the current plan being a LocalRelation
-        # means the catalog is already driver-resident
-        cur = self._literal_rows(self.libraries)
-        if cur is not None:
-            self.libraries = literal_df(
-                self.spark, [tuple(r) for r in cur] + [new_row],
-                LIBRARIES_SCHEMA,
-            )
-        else:
-            self.libraries = self.libraries.unionByName(
-                literal_df(self.spark, [new_row], LIBRARIES_SCHEMA)
-            )
-        self._library_ids.add(lid)
+        lid, ts = _new_id(), _now()
+        self._catalog("libraries")[lid] = dict(
+            library_id=lid, name=name, indexer_type=indexer_type,
+            created_at=ts, updated_at=ts, tags=_clean_tag_list(tags),
+        )
         return lid
 
     def update_library(self, library_id: str, name: str | None = None,
@@ -194,143 +214,65 @@ class LibraryStore:
         """Rename / replace tags, preserving created_at, bumping
         updated_at (reference M8, ``library_service.py:156-169``)."""
         self._require_library(library_id)
-        hit = F.col("library_id") == library_id
-        df = self.libraries
+        if name is not None and not name.strip():
+            raise ValidationError("library name must be non-empty")
+        row = self._catalog("libraries")[library_id]
         if name is not None:
-            if not name.strip():
-                raise ValidationError("library name must be non-empty")
-            df = df.withColumn("name", F.when(hit, F.lit(name)).otherwise(F.col("name")))
+            row["name"] = name
         if tags is not None:
-            df = df.withColumn(
-                "tags",
-                F.when(hit, self._clean_tags(F.array(*[F.lit(t) for t in tags])))
-                .otherwise(F.col("tags")),
-            )
-        self.libraries = df.withColumn(
-            "updated_at", F.when(hit, F.lit(_now())).otherwise(F.col("updated_at"))
-        )
+            row["tags"] = _clean_tag_list(tags)
+        row["updated_at"] = _now()
 
     def delete_library(self, library_id: str) -> None:
         """Cascade drop (reference M9 — whose endpoint is bugged/disabled;
         the intended semantics are implemented here)."""
         self._require_library(library_id)
-        keep = F.col("library_id") != library_id
-        self.libraries = self.libraries.filter(keep)
-        self.documents = self.documents.filter(keep)
-        self.chunks = self.chunks.filter(keep)
-        self._library_ids.discard(library_id)
+        del self._catalog("libraries")[library_id]
+        docs = self._catalog("documents")
+        for did in [d for d, r in docs.items() if r["library_id"] == library_id]:
+            del docs[did]
+        self.chunks = self.chunks.filter(F.col("library_id") != library_id)
 
     # -- document CRUD (M2, M7, M8) -----------------------------------------
-
-    @staticmethod
-    def _literal_rows(df: DataFrame) -> list | None:
-        """Rows of a driver-literal frame (one that plans as a
-        LocalRelation — e.g. built via ``literal_df``), else None.
-        A LocalRelation's rows already live in the plan, so the
-        collect here is a driver-side copy, not a distributed job."""
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LocalRelation":
-            return None
-        return df.collect()
 
     def add_documents(self, library_id: str, rows: DataFrame) -> DataFrame:
         """Append documents; input needs ``title`` (+ optional description/
         source/author/tags).  Returns the appended rows with generated ids.
-        Validation per reference ``document.py:25-53``.
-
-        Driver-literal inputs (LocalRelation-planned, e.g. from
-        ``literal_df``) take a driver-side fast path (r14): ids,
-        defaults and validation are computed on the literal rows and
-        the result is itself a LocalRelation — zero distributed jobs
-        for a metadata-only mutation, exactly the reference's
-        in-memory-dict cost model.  The distributed path below is
-        unchanged and still serves arbitrary (arbitrarily LARGE)
-        inputs; the fast path is size-safe by construction because a
-        LocalRelation is already driver-resident."""
+        Validation per reference ``document.py:25-53``: one blank title
+        rejects the whole batch.  The batch is collected and its ids are
+        assigned driver-side, like every catalog mutation."""
         self._require_library(library_id)
-        lit = self._literal_rows(rows)
-        if lit is not None:
-            ts = _now()
-            cols = set(rows.columns)
-
-            def field(r, name, default):
-                return r[name] if name in cols else default
-
-            out = []
-            for r in lit:
-                title = field(r, "title", None)
-                # same predicate as the distributed path's
-                # coalesce(trim(title), '') == '' loud check
-                if title is None or not str(title).strip():
-                    raise ValidationError("document title must be non-empty")
-                raw_tags = field(r, "tags", None) or []
-                # _clean_tags semantics: drop whitespace-only, dedup
-                # keeping first occurrence, preserve original values
-                clean = list(dict.fromkeys(t for t in raw_tags if t and t.strip()))
-                out.append((
-                    _new_id(), library_id, title,
-                    field(r, "description", ""),
-                    field(r, "source", ""),
-                    field(r, "author", None),
-                    ts, clean,
-                ))
-            new = literal_df(self.spark, out, DOCUMENTS_SCHEMA)
-            cur = self._literal_rows(self.documents)
-            if cur is not None:
-                # single merged LocalRelation (see create_library)
-                self.documents = literal_df(
-                    self.spark, [tuple(r) for r in cur] + out,
-                    DOCUMENTS_SCHEMA,
-                )
-            else:
-                self.documents = self.documents.unionByName(new)
-            return new
-        udf_id = F.expr("uuid()")
-        new = (
-            rows.withColumn("document_id", udf_id)
-            .withColumn("library_id", F.lit(library_id))
-            .withColumn("created_at", F.lit(_now()))
-            .withColumn("tags", self._clean_tags(F.col("tags") if "tags" in rows.columns else F.lit(None)))
-        )
-        for c, default in (("description", ""), ("source", ""), ("author", None)):
-            if c not in rows.columns:
-                new = new.withColumn(c, F.lit(default).cast("string"))
-        new = new.select(*self.documents.columns)
-        # materialize generated ids so they are stable across re-evaluation
-        # (uuid() is nondeterministic per-evaluation — SURVEY.md F9 note);
-        # localCheckpoint pins the rows executor-side without a driver
-        # round-trip.  eager=False: the validation count below is the
-        # first action, so checkpointing rides along with it — one job,
-        # not two (document.py:47-53).
-        new = new.localCheckpoint(eager=False)
-        n_bad = new.filter(F.coalesce(F.trim("title"), F.lit("")) == "").count()
-        if n_bad:
-            raise ValidationError("document title must be non-empty")  # document.py:47-53
-        self.documents = self.documents.unionByName(new)
-        return new
+        ts = _now()
+        new = []
+        for r in rows.collect():
+            r = r.asDict()
+            title = r.get("title")
+            if title is None or not str(title).strip():
+                raise ValidationError("document title must be non-empty")  # document.py:47-53
+            new.append(dict(
+                document_id=_new_id(), library_id=library_id, title=title,
+                description=r.get("description", ""), source=r.get("source", ""),
+                author=r.get("author"), created_at=ts, tags=_clean_tag_list(r.get("tags")),
+            ))
+        self._catalog("documents").update((d["document_id"], d) for d in new)
+        return literal_df(self.spark, [tuple(d.values()) for d in new], DOCUMENTS_SCHEMA)
 
     def update_document(self, document_id: str, title: str | None = None,
                         description: str | None = None) -> None:
-        hit = F.col("document_id") == document_id
-        if self.documents.filter(hit).isEmpty():
-            raise KeyError(f"document {document_id} not found")
-        df = self.documents
+        self._require_document(document_id)
+        if title is not None and not title.strip():
+            raise ValidationError("document title must be non-empty")
+        row = self._catalog("documents")[document_id]
         if title is not None:
-            if not title.strip():
-                raise ValidationError("document title must be non-empty")
-            df = df.withColumn("title", F.when(hit, F.lit(title)).otherwise(F.col("title")))
+            row["title"] = title
         if description is not None:
-            df = df.withColumn(
-                "description", F.when(hit, F.lit(description)).otherwise(F.col("description"))
-            )
-        self.documents = df
+            row["description"] = description
 
     def delete_document(self, document_id: str) -> None:
         """Cascade: the document's chunks go with it (reference M7,
         ``document_service.py:104-123``)."""
-        if self.documents.filter(F.col("document_id") == document_id).isEmpty():
-            raise KeyError(f"document {document_id} not found")
-        self.documents = self.documents.filter(F.col("document_id") != document_id)
+        self._require_document(document_id)
+        del self._catalog("documents")[document_id]
         self.chunks = self.chunks.filter(F.col("document_id") != document_id)
 
     # -- chunk CRUD (M3-M6) --------------------------------------------------
@@ -345,21 +287,22 @@ class LibraryStore:
         docs = self.documents.filter(F.col("library_id") == library_id).select(
             "document_id", F.lit(True).alias("__doc_ok")
         )
-        new = rows.join(F.broadcast(docs), "document_id", "left")
-        if "embedding" not in rows.columns:
-            new = with_embeddings(new, text_col="text", dim=self.dim)
-        new = (
-            new.withColumn("chunk_id", F.expr("uuid()"))
-            .withColumn("library_id", F.lit(library_id))
-            .withColumn("created_at", F.lit(_now()))
-            .withColumn("tags", self._clean_tags(F.col("tags") if "tags" in rows.columns else F.lit(None)))
-            .withColumn("embedding", F.col("embedding").cast("array<float>"))
+        # the new rows as ONE projection in chunks column order: the
+        # input's columns, typed nulls for absent ones, generated values
+        given = set(rows.columns)
+        cols = {f.name: F.col(f.name) if f.name in given else F.lit(None).cast(f.dataType)
+                for f in self.chunks.schema}
+        cols.update(
+            chunk_id=F.expr("uuid()"),
+            library_id=F.lit(library_id),
+            created_at=F.lit(_now()),
+            tags=self._clean_tags(cols["tags"]),
+            embedding=(cols["embedding"] if "embedding" in given
+                       else hash_embedding_expr("text", self.dim)).cast("array<float>"),
         )
-        for c, typ in (("source", "string"), ("author", "string"), ("title", "string"),
-                       ("description", "string"), ("page", "int")):
-            if c not in new.columns:
-                new = new.withColumn(c, F.lit(None).cast(typ))
-        new = new.select(*self.chunks.columns, "__doc_ok")
+        new = rows.join(F.broadcast(docs), "document_id", "left").select(
+            *[c.alias(n) for n, c in cols.items()], "__doc_ok"
+        )
         # ONE source scan AND one job: ids + embeddings + validation flag
         # materialize together under the validation aggregate below
         # (eager=False checkpoint rides along with the first action).
@@ -400,8 +343,7 @@ class LibraryStore:
             raise KeyError(f"chunk {chunk_id} not found")
         df = self.chunks
         if document_id is not None:
-            if self.documents.filter(F.col("document_id") == document_id).isEmpty():
-                raise KeyError(f"document {document_id} not found")
+            self._require_document(document_id)
             df = df.withColumn(
                 "document_id", F.when(hit, F.lit(document_id)).otherwise(F.col("document_id"))
             )

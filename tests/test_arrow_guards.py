@@ -170,3 +170,18 @@ def test_flat_matrix_is_slice_aware():
         0,
         2,
     )
+
+
+def test_literal_df_rejects_nan(spark):
+    """A NaN would cross the Arrow conversion as NULL: ``literal_df``
+    raises for one at the top level and inside an array cell."""
+    from inmem_vector_db_spark.functions.localframe import literal_df
+
+    with pytest.raises(ValueError, match="nan"):
+        literal_df(spark, [(1, float("nan"))], "cid bigint, score double")
+    with pytest.raises(ValueError, match="nan"):
+        literal_df(
+            spark,
+            [(0, [0.0, 1.0]), (1, [1.0, float("nan")])],
+            "cid bigint, centroid array<double>",
+        )

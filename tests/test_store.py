@@ -267,7 +267,7 @@ def test_metadata_update_preserves_created_at(populated):
 def test_save_partitioned_roundtrip(spark, populated, tmp_path):
     import os
 
-    store, lid, _ = populated
+    store, lid, dids = populated
     root = str(tmp_path / "snap_part")
     store.save(root, partition_by_library=True)
     # partition directories exist and restore works identically
@@ -277,6 +277,45 @@ def test_save_partitioned_roundtrip(spark, populated, tmp_path):
     restored = LibraryStore.load(spark, root)
     assert restored.chunks.count() == store.chunks.count()
     assert set(restored.chunks.columns) == set(store.chunks.columns)
+    # partitioned documents read back with library_id last; the
+    # restored views keep the schema's column order and the same rows
+    for name in ("libraries", "documents"):
+        old, new = getattr(store, name), getattr(restored, name)
+        assert new.columns == old.columns
+        assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
+    # and the restored catalogs take mutations
+    restored.update_library(lid, name="renamed")
+    restored.update_document(dids["Reef"], title="Atoll")
+    restored.add_documents(lid, spark.createDataFrame([("Comet",)], "title string"))
+    assert restored.libraries.head()["name"] == "renamed"
+    assert sorted(r["title"] for r in restored.documents.collect()) == ["Atoll", "Comet", "JWST"]
+
+
+def test_catalog_mutations_build_only_their_batch(spark, store, monkeypatch):
+    """A catalog mutation costs O(batch), not O(catalog): twenty one-row
+    ``add_documents`` calls build at most one literal row each, and the
+    documents view is built once, on the first read after them."""
+    import inmem_vector_db_spark.store as store_mod
+    from inmem_vector_db_spark.functions.localframe import literal_df
+
+    lid = store.create_library("grow")
+    batches = [literal_df(spark, [(f"d{i}",)], "title string") for i in range(20)]
+    built = []
+
+    def counting_literal_df(spark_, rows, schema):
+        built.append(len(rows))
+        return literal_df(spark_, rows, schema)
+
+    monkeypatch.setattr(store_mod, "literal_df", counting_literal_df)
+    for batch in batches:
+        built.clear()
+        store.add_documents(lid, batch)
+        assert sum(built) <= 1
+    built.clear()
+    docs = store.documents
+    assert built == [20]
+    assert store.documents is docs and built == [20]
+    assert docs.count() == 20
 
 
 def test_search_all_libraries(spark, populated):

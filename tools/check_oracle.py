@@ -3,6 +3,7 @@
 compare row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+An unknown query name exits 2 before Spark starts.
 """
 
 from __future__ import annotations
@@ -94,13 +95,17 @@ def main(order_names: list[str] | None = None) -> int:
     correctness run executes."""
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print("unknown entries:", " ".join(unknown), file=sys.stderr)
+        return 2
     spark = get_spark("oracle-check", master="local[8]",
                       extra_conf={"spark.sql.shuffle.partitions": "8"})
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
     for name in (order_names if order_names is not None
                  else entrymod.exec_order()):
