@@ -36,7 +36,9 @@ from inmem_vector_db_spark.operators.regress import (
     with_betas,
     with_r2,
 )
+from inmem_vector_db_spark.session import scratch_dir
 from inmem_vector_db_spark.sources.loader import load_table
+from inmem_vector_db_spark.streaming.ingest import drain
 
 # λ on the slope diagonal (intercept unregularized).  Scale-wise this
 # is a mild shrink against the ~1e13 moment sums; the mechanism (not
@@ -185,12 +187,10 @@ def ridge_online_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted state is 10 integers per batch, and re-training after
     any append is an O(d³) solve on the folded moments — history is
     never re-scanned."""
-    import tempfile
-
     design = _design(spark, sf_dir).select("x1", "x2", "y")
-    staged = tempfile.mkdtemp(prefix="ridge_feed_")
+    staged = scratch_dir("ridge_feed_")
     design.repartition(4).write.mode("append").parquet(staged)
-    state = tempfile.mkdtemp(prefix="ridge_state_")
+    state = scratch_dir("ridge_state_")
     stream_in = (
         spark.readStream.schema("x1 long, x2 long, y long")
         .option("maxFilesPerTrigger", 1)
@@ -202,12 +202,7 @@ def ridge_online_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         moment_sums(batch_df).write.mode("append").parquet(state)
 
-    q = (
-        stream_in.writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream_in.writeStream.foreachBatch(handle))
     fit = with_r2(with_betas(combine_moments(spark.read.parquet(state)), LAM))
     return fit.select(F.col("n").alias("n_rows"), "b0", "b1", "b2", "r2")
 

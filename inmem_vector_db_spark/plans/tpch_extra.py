@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from inmem_vector_db_spark.plans.relational import dec_revenue
+from inmem_vector_db_spark.session import scratch_dir
 from inmem_vector_db_spark.sources.loader import load_table
 
 _DEC = "decimal(18,4)"
@@ -723,8 +724,6 @@ _BUCKETED_FACTS: dict[tuple, tuple[str, str]] = {}
 
 
 def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import tempfile
-
     from inmem_vector_db_spark.sources.maintenance import write_bucketed
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -736,7 +735,7 @@ def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
         tag = "b" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
         li_name, ord_name = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
-        base = tempfile.mkdtemp(prefix="bucketed_facts_")
+        base = scratch_dir("bucketed_facts_")
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"
         )

@@ -7,7 +7,10 @@ or by ``spark-defaults.conf`` on a real cluster.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -88,3 +91,17 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_SCRATCH_ROOT: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for staged inputs, artifacts and stream
+    checkpoints.  Every one lives under one per-process root, made on
+    first use in ``tempfile.gettempdir()`` (so ``TMPDIR`` decides the
+    location) and removed when the interpreter exits."""
+    if not _SCRATCH_ROOT:
+        _SCRATCH_ROOT.append(tempfile.mkdtemp(prefix="inmem_vdb_"))
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT[0], ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])

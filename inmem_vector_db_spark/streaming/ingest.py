@@ -15,18 +15,35 @@ properly:
   reference's "background rebuild" becomes an incremental append with a
   bounded staleness window instead of an O(n) rebuild (M10).
 
-Both run identically under ``trigger(availableNow=True)`` for bounded
-backfills and under a continuous trigger in production.
+Both run identically under an availableNow trigger (``drain``) for
+bounded backfills and under a continuous trigger in production.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from inmem_vector_db_spark.session import scratch_dir
+
+
+def drain(writer: DataStreamWriter, checkpoint: str | None = None) -> None:
+    """Start ``writer`` with an availableNow trigger and wait until it
+    has processed everything its sources hold — the engine's one bounded
+    stream run.  A caller's ``checkpoint`` is used as given and never
+    touched, so a later drain resumes from it; without one the query
+    checkpoints to a scratch directory that is deleted when it ends."""
+    ckpt = checkpoint or scratch_dir("ckpt_")
+    try:
+        writer = writer.option("checkpointLocation", ckpt)
+        writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def windowed_event_counts(
@@ -100,17 +117,11 @@ def run_stream_to_memory(
     return it as a DataFrame — used by tests and the driver demo to
     prove the streaming plan computes the same result as the batch plan.
     """
-    spark = sdf.sparkSession
     qname = name or f"mem_{uuid.uuid4().hex[:8]}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        sdf.writeStream.format("memory").queryName(qname).outputMode(output_mode)
     )
-    q.awaitTermination()
-    return spark.table(qname)
+    return sdf.sparkSession.table(qname)
 
 
 def running_user_totals(
@@ -247,23 +258,16 @@ def incremental_index_ingest(
     append (``library.py:113-114``) with O(batch) incremental work.
 
     Bounded run (drains everything currently in ``source_dir`` then
-    stops); swap the trigger for continuous operation.
+    stops); a caller's ``checkpoint_dir`` makes the next call resume
+    after the files already ingested.  Swap the trigger for continuous
+    operation.
     """
-    checkpoint = checkpoint_dir or os.path.join(
-        tempfile.gettempdir(), f"ckpt_{uuid.uuid4().hex[:8]}"
-    )
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         build_index(batch_df).write.mode("append").parquet(index_path)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(handle), checkpoint_dir)
 
 
 def stream_exact_dedup(
@@ -319,14 +323,7 @@ def stream_kmv_distinct(
         state.clear()
         state.update(merged)
 
-    checkpoint = tempfile.mkdtemp(prefix="kmv_ckpt_")
-    q = (
-        sdf.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(handle))
     return sorted(state)
 
 
@@ -387,12 +384,5 @@ def stream_histogram(
             n0, s0 = state.get(r["bin"], (0, 0.0))
             state[r["bin"]] = (n0 + r["n"], s0 + r["s"])
 
-    checkpoint = tempfile.mkdtemp(prefix="hist_ckpt_")
-    q = (
-        sdf.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(sdf.writeStream.foreachBatch(handle))
     return state

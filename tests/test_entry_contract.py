@@ -110,7 +110,7 @@ _BUILD_BEFORE_CONSUMER = [
     # merge derives from the shared base250 artifact, whose build cost
     # belongs to its first toucher (the append entry)
     ("ann_ivf_append_search", "ann_ivf_merge_search"),
-    # the _STAGED_EVENTS default-key staging write (one-time events
+    # the _stage_events default-key staging write (one-time events
     # copy for the file-stream source) must attribute to
     # events_hourly_stream, its designated first toucher (r8 item #2:
     # this staging cost was the entry's entire "drift" vs r1) — every
@@ -185,16 +185,10 @@ def _artifact_owning_entries() -> set[str]:
         "_QUANTIZED_CORPUS",
         "_KMEANS_COARSE",
         "_EXACT_RECALL_BASELINE",
-        # the streaming entries' staged file-source dir: first toucher
-        # pays a full events write (the r7->r8 events_hourly_stream
-        # "drift" was exactly this staging cost, profiled in BASELINE.md)
-        "_STAGED_EVENTS",
-        # the format-roundtrip entries' staged documents copies: every
-        # user stages its OWN (sf_dir, fmt) key, so each is its own
-        # build row (inline users are flagged directly; _stage_docs_as
-        # helper users via the token's first-toucher plus manual
+        # (staged stream and format inputs go through _memo_artifact,
+        # so MEMO_FNS flags them: inline users directly, _stage_*
+        # helper users via the helper's first toucher plus manual
         # extras in _BUILD_ENTRIES)
-        "_STAGED_FMT",
         # module-level dict memo in plans/tpch_extra: the bucketed
         # warehouse (lineitem+orders hash-bucketed on orderkey).  Its
         # accessor lives in plans/, not entrymod, so the one-level
