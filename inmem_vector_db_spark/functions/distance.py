@@ -12,9 +12,11 @@ Semantics match the reference's numpy kernels
 
 Lower score = more similar for all four metrics.
 
-These are pure ``zip_with``/``aggregate`` expressions: they stay inside
-whole-stage codegen on the JVM — no Python round-trip — so a distance
-column over a 100 TB scan pipelines with the parquet reader.  For dense
+These are pure ``zip_with``/``aggregate`` expressions on the JVM — no
+Python round-trip — so a distance column over a 100 TB scan pipelines
+with the parquet reader.  Both are ``CodegenFallback`` expressions in
+Spark 4.1 (``ZipWith``, ``ArrayAggregate``): whole-stage codegen does
+not compile them, and they run interpreted inside the stage.  For dense
 multi-query matrix work (one query batch x one corpus partition) the
 vectorized numpy path in ``operators.knn`` beats per-row expressions;
 both produce identical doubles.

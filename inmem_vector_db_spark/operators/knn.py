@@ -18,7 +18,8 @@ Spark-first design:
   nested-loop join, then per-query top-k.  Two implementations:
 
   - ``knn_join``: pure Column expressions + window ``row_number() <= k``.
-    Whole-stage-codegen'd, oracle-exact, but the window shuffles
+    JVM-only (its ``zip_with``/``aggregate`` distance runs interpreted
+    inside the stage), oracle-exact, but the window shuffles
     |corpus| x |queries| candidate rows by query_id — fine for modest
     fan-outs, wrong at 100 TB.
 

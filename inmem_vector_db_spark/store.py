@@ -13,10 +13,16 @@ per-indexer locks, pickled per-library on every mutation
   reads as a DataFrame (one LocalRelation, built on the first read after
   a mutation).  They must fit in driver memory anyway: ``add_chunks``
   and ``search`` broadcast the documents table;
-* chunks are **immutable DataFrames**; every chunk mutation is a pure
-  transformation producing the next version (no locks — the reference's
-  ``threading.Lock``/``asyncio.Lock`` machinery has no Spark analog
-  because nothing is shared-mutable);
+* chunks are kept the same way, with distributed rows: the table of
+  record is one ``localCheckpoint``ed segment per ``add_chunks`` batch,
+  a driver-side ``{chunk_id: row}`` map of updated rows and one keep
+  predicate that every delete ANDs into.  Only ``add_chunks`` (its
+  batch) and ``update_chunk`` (one row read) run a Spark job.  The
+  table reads as one view (the segments without the edited ids, plus
+  the edits as a LocalRelation, filtered by the keep predicate), built
+  on the first read after a mutation; once ``_FOLD_AFTER`` mutations
+  have piled up, that read checkpoints the view into the only segment,
+  so the plan of a long-lived store stays bounded;
 * persistence = parquet round-trip (``save``/``load``), replacing pickle
   save/load (``library.py:120-144``, S1-S3).  On a cluster these are
   partitioned tables (``partitionBy("library_id")``) and the chunk
@@ -35,18 +41,20 @@ update-chunk always-404 (``chunk_service.py:154-156``).
 
 from __future__ import annotations
 
+import functools
 import os
 import uuid
 from collections.abc import Sequence
 from datetime import datetime, timezone
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from inmem_vector_db_spark.functions.distance import distance
 from inmem_vector_db_spark.functions.localframe import literal_df
-from inmem_vector_db_spark.sources.embedding import DEFAULT_DIM, hash_embedding_expr
+from inmem_vector_db_spark.sources.embedding import DEFAULT_DIM, hash_embed_texts, hash_embedding_expr
 
 LIBRARIES_SCHEMA = (
     "library_id string, name string, indexer_type string, "
@@ -62,6 +70,9 @@ CHUNKS_SCHEMA = (
     "description string, page int, created_at timestamp, tags array<string>"
 )
 _TABLES = ("libraries", "documents", "chunks")
+# chunk mutations one chunks view may carry: the first read past them
+# folds the view into a single segment (an ingest round makes three)
+_FOLD_AFTER = 8
 
 METRICS = ("euclidean", "cosine", "dot_product", "manhattan")
 INDEXER_TYPES = ("flat", "lsh")  # hnsw intentionally absent, SURVEY.md 7.3
@@ -120,9 +131,9 @@ class ValidationError(ValueError):
 
 
 class LibraryStore:
-    """Driver-side catalogs and a chunks DataFrame with explicit parquet
-    persistence — the Spark analog of the reference's global dict +
-    pickle files."""
+    """Driver-side catalogs and a segmented chunks table with explicit
+    parquet persistence — the Spark analog of the reference's global
+    dict + pickle files."""
 
     libraries = _catalog_table("libraries", LIBRARIES_SCHEMA)
     documents = _catalog_table("documents", DOCUMENTS_SCHEMA)
@@ -133,20 +144,62 @@ class LibraryStore:
         # {id: row dict in schema column order}, insertion-ordered
         self._rows: dict[str, dict[str, dict]] = {"libraries": {}, "documents": {}}
         self._views: dict[str, DataFrame] = {}
-        # a TRUE empty LocalRelation (r14: via literal_df — a bare
-        # createDataFrame([], schema) is a LogicalRDD, which
-        # PropagateEmptyRelation cannot prove empty, so unions built on
-        # it never folded and every metadata head() escalated through
-        # take-jobs): Catalyst prunes it out of every union, so the
-        # empty base costs nothing (wrapping it in coalesce/repartition
-        # would BLOCK that rule and measurably regress the whole
-        # mutation family)
-        self.chunks = literal_df(spark, [], CHUNKS_SCHEMA)
+        self._set_chunks([])
 
     def _catalog(self, name: str) -> dict[str, dict]:
         """The ``name`` catalog, for a mutation: its cached view goes."""
         self._views.pop(name, None)
         return self._rows[name]
+
+    @property
+    def chunks(self) -> DataFrame:
+        """The segments without the edited ids, plus the edits as one
+        LocalRelation (a true empty one when there are none, which
+        Catalyst prunes out of the union), filtered by the keep
+        predicate.  Assigning a DataFrame makes it the only segment."""
+        view = self._views.get("chunks")
+        if view is None:
+            parts = list(self._segments)
+            if self._edits:
+                edited = F.col("chunk_id").isin(list(self._edits))
+                parts = [s.filter(~edited) for s in parts]
+            rows = [tuple(r.values()) for r in self._edits.values()]
+            parts.append(literal_df(self.spark, rows, CHUNKS_SCHEMA))
+            view = functools.reduce(DataFrame.union, parts).filter(self._keep)
+            if self._mutations >= _FOLD_AFTER:
+                # one partition per core: the fold bounds the tasks of a
+                # read as well as its plan
+                cores = self.spark.sparkContext.defaultParallelism
+                view = view.coalesce(cores).localCheckpoint(eager=False)
+                self._set_chunks([view])
+            self._views["chunks"] = view
+        return view
+
+    @chunks.setter
+    def chunks(self, df: DataFrame) -> None:
+        # by name: a partitioned snapshot reads back with library_id last
+        self._set_chunks([df.select(*StructType.fromDDL(CHUNKS_SCHEMA).fieldNames())])
+
+    def _set_chunks(self, segments: list[DataFrame]) -> None:
+        self._segments, self._edits, self._keep, self._mutations = segments, {}, F.lit(True), 0
+        self._views.pop("chunks", None)
+
+    def _chunks_changed(self) -> None:
+        """A chunk mutation: the cached view goes, and it counts toward
+        the next fold."""
+        self._views.pop("chunks", None)
+        self._mutations += 1
+
+    def _keep_only(self, cond) -> None:
+        """Delete the chunks failing ``cond`` (no job runs)."""
+        self._keep = self._keep & cond
+        self._chunks_changed()
+
+    def _embed(self, text: str) -> list[float]:
+        """One text embedded driver-side: a 1-row Spark stage would cost
+        a whole job for nothing (the reference, too, embeds the query
+        once before searching, §3.1 step 3)."""
+        return hash_embed_texts(pd.Series([text]), self.dim)[0]
 
     # -- persistence (S1-S3) ---------------------------------------------
 
@@ -179,8 +232,9 @@ class LibraryStore:
         if library_id not in self._rows["libraries"]:
             raise KeyError(f"library {library_id} not found")  # P5 404 analog
 
-    def _require_document(self, document_id: str) -> None:
-        if document_id not in self._rows["documents"]:
+    def _require_document(self, document_id: str, library_id: str | None = None) -> None:
+        doc = self._rows["documents"].get(document_id)
+        if doc is None or library_id not in (None, doc["library_id"]):
             raise KeyError(f"document {document_id} not found")
 
     @staticmethod
@@ -231,7 +285,7 @@ class LibraryStore:
         docs = self._catalog("documents")
         for did in [d for d, r in docs.items() if r["library_id"] == library_id]:
             del docs[did]
-        self.chunks = self.chunks.filter(F.col("library_id") != library_id)
+        self._keep_only(F.col("library_id") != library_id)
 
     # -- document CRUD (M2, M7, M8) -----------------------------------------
 
@@ -273,7 +327,7 @@ class LibraryStore:
         ``document_service.py:104-123``)."""
         self._require_document(document_id)
         del self._catalog("documents")[document_id]
-        self.chunks = self.chunks.filter(F.col("document_id") != document_id)
+        self._keep_only(F.col("document_id") != document_id)
 
     # -- chunk CRUD (M3-M6) --------------------------------------------------
 
@@ -291,7 +345,7 @@ class LibraryStore:
         # input's columns, typed nulls for absent ones, generated values
         given = set(rows.columns)
         cols = {f.name: F.col(f.name) if f.name in given else F.lit(None).cast(f.dataType)
-                for f in self.chunks.schema}
+                for f in StructType.fromDDL(CHUNKS_SCHEMA)}
         cols.update(
             chunk_id=F.expr("uuid()"),
             library_id=F.lit(library_id),
@@ -329,46 +383,38 @@ class LibraryStore:
         if stats.get("bad_emb"):
             raise ValidationError("embedding must be non-empty")  # chunk.py:63-71
         new = new.drop("__doc_ok")
-        self.chunks = self.chunks.unionByName(new)
+        self._segments.append(new)
+        self._chunks_changed()
         return new
 
     def update_chunk(self, chunk_id: str, text: str | None = None,
                      tags: Sequence[str] | None = None,
                      document_id: str | None = None) -> None:
         """Re-embed iff text changed; metadata merge preserves created_at;
-        optional move across documents (reference M5 semantics, minus its
-        always-404 endpoint bug)."""
-        hit = F.col("chunk_id") == chunk_id
-        if self.chunks.filter(hit).isEmpty():
+        optional move to another document of the chunk's library
+        (reference M5 semantics, ``chunk_service.py:143-191``, minus its
+        always-404 endpoint bug).  One job reads the row; the edit is
+        driver-side."""
+        row = self.chunks.filter(F.col("chunk_id") == chunk_id).head()
+        if row is None:
             raise KeyError(f"chunk {chunk_id} not found")
-        df = self.chunks
+        row = row.asDict()
         if document_id is not None:
-            self._require_document(document_id)
-            df = df.withColumn(
-                "document_id", F.when(hit, F.lit(document_id)).otherwise(F.col("document_id"))
-            )
+            self._require_document(document_id, row["library_id"])
+            row["document_id"] = document_id
         if tags is not None:
-            df = df.withColumn(
-                "tags",
-                F.when(hit, self._clean_tags(F.array(*[F.lit(t) for t in tags])))
-                .otherwise(F.col("tags")),
-            )
+            row["tags"] = _clean_tag_list(tags)
         if text is not None:
             if not text.strip():
                 raise ValidationError("chunk text must be non-empty")
-            # projections only, no filter + union: a union would double
-            # the chunks lineage on every text update
-            df = df.withColumn("text", F.when(hit, F.lit(text)).otherwise(F.col("text")))
-            df = df.withColumn(
-                "embedding",
-                F.when(hit, hash_embedding_expr("text", self.dim))
-                .otherwise(F.col("embedding")),
-            )
-        self.chunks = df
+            row["text"], row["embedding"] = text, self._embed(text)
+        self._edits[chunk_id] = row
+        self._chunks_changed()
 
     def delete_chunks(self, chunk_ids: Sequence[str]) -> None:
-        """Anti-join delete (reference M6)."""
-        self.chunks = self.chunks.filter(~F.col("chunk_id").isin(list(chunk_ids)))
+        """Tombstone delete (reference M6): the ids leave through the keep
+        predicate."""
+        self._keep_only(~F.col("chunk_id").isin(list(chunk_ids)))
 
     # -- reads (P1-P5, A1-A2, J5) ---------------------------------------------
 
@@ -438,12 +484,7 @@ class LibraryStore:
         rank)."""
         if k <= 0:
             raise ValidationError("k must be > 0")
-        import pandas as pd
-
-        from inmem_vector_db_spark.sources.embedding import hash_embed_texts
-
-        qvec = hash_embed_texts(pd.Series([query_text]), self.dim)[0]
-        qlit = F.lit([float(x) for x in qvec])
+        qlit = F.lit(self._embed(query_text))
         scored = self.chunks.withColumn(
             "score", distance(metric, qlit, F.col("embedding"))
         )
@@ -487,15 +528,7 @@ class LibraryStore:
         if metric not in METRICS:
             raise ValidationError(f"metric must be one of {METRICS}")
         self._require_library(library_id)
-        # embed the single query string driver-side (the reference does
-        # the same: one embed call before the search, §3.1 step 3) — a
-        # 1-row mapInPandas job would cost a full Spark job for nothing
-        import pandas as pd
-
-        from inmem_vector_db_spark.sources.embedding import hash_embed_texts
-
-        qvec = hash_embed_texts(pd.Series([query_text]), self.dim)[0]
-        qlit = F.lit([float(x) for x in qvec])
+        qlit = F.lit(self._embed(query_text))
 
         base = self.chunks.filter(F.col("library_id") == library_id)
         rank_metric = "euclidean" if parity else metric

@@ -215,6 +215,93 @@ def test_sequential_text_updates_keep_lineage_flat(populated):
     assert row["text"] == "revision 7"
     assert row["embedding"] == hash_embed_texts(pd.Series(["revision 7"]))[0]
 
+def test_update_chunk_rejects_cross_library_move(spark, populated):
+    """A chunk moves only to a document of its own library (reference
+    ``chunk_service.py:143-191`` resolves the target inside the chunk's
+    library): another library's document is not found, and the chunk
+    stays as it was."""
+    store, _, dids = populated
+    other = store.create_library("other")
+    foreign = store.add_documents(
+        other, spark.createDataFrame([("F",)], "title string")
+    ).head()["document_id"]
+    cid = store.chunks.filter(F.col("text") == "successor to hubble").head()["chunk_id"]
+    with pytest.raises(KeyError):
+        store.update_chunk(cid, text="moved away", document_id=foreign)
+    row = store.chunks.filter(F.col("chunk_id") == cid).head()
+    assert (row["document_id"], row["text"]) == (dids["JWST"], "successor to hubble")
+
+
+def test_chunks_setter_restores_saved_table(spark, populated):
+    """Assigning a saved chunks table undoes every later add, update and
+    delete (a benchmark round's restore), and later mutations apply to
+    the restored table."""
+    store, lid, dids = populated
+    saved = store.chunks
+    want = sorted(map(tuple, saved.collect()))
+    cid = saved.filter(F.col("text") == "successor to hubble").head()["chunk_id"]
+    gone = saved.filter(F.col("text") == "largest living structure").head()["chunk_id"]
+    store.add_chunks(
+        lid,
+        spark.createDataFrame([(dids["Reef"], "kelp forest")], "document_id string, text string"),
+    )
+    store.update_chunk(cid, text="changed")
+    store.delete_chunks([gone])
+    store.chunks = saved
+    assert sorted(map(tuple, store.chunks.collect())) == want
+    store.update_chunk(cid, tags=["restored"])
+    store.delete_chunks([gone])
+    rows = {r["chunk_id"]: r for r in store.chunks.collect()}
+    assert len(rows) == 5 and gone not in rows
+    assert (rows[cid]["text"], rows[cid]["tags"]) == ("successor to hubble", ["restored"])
+
+
+def test_partitioned_snapshot_chunks_take_updates(spark, populated, tmp_path):
+    """A partitioned snapshot's chunks read back with library_id last;
+    the restored table keeps the schema's column order and rows, and
+    takes updates."""
+    store, lid, dids = populated
+    root = str(tmp_path / "snap_part")
+    store.save(root, partition_by_library=True)
+    assert spark.read.parquet(f"{root}/chunks").columns[-1] == "library_id"
+    restored = LibraryStore.load(spark, root)
+    assert restored.chunks.columns == store.chunks.columns
+    assert sorted(map(tuple, restored.chunks.collect())) == sorted(
+        map(tuple, store.chunks.collect())
+    )
+    cid = restored.chunks.filter(F.col("text") == "successor to hubble").head()["chunk_id"]
+    restored.update_chunk(cid, text="revised", document_id=dids["Reef"])
+    row = restored.chunks.filter(F.col("chunk_id") == cid).head()
+    assert (row["text"], row["document_id"], row["library_id"]) == ("revised", dids["Reef"], lid)
+    assert restored.chunks.count() == 6
+
+
+def test_interleaved_chunk_mutations_keep_search_plan_bounded(spark, store):
+    """A long-lived store stays O(1) per mutation: rounds of a small add,
+    a text update and a two-id delete leave the optimized ``search``
+    plan under a fixed node count (one line per node), however many
+    rounds ran, and the live row count exact."""
+    from inmem_vector_db_spark.functions.localframe import literal_df
+    from inmem_vector_db_spark.store import _FOLD_AFTER
+
+    lid = store.create_library("long-lived")
+    did = store.add_documents(
+        lid, literal_df(spark, [("d",)], "title string")
+    ).head()["document_id"]
+    live = 0
+    for i in range(3 * _FOLD_AFTER):
+        new = store.add_chunks(lid, literal_df(
+            spark, [(did, f"text {i}-{j}") for j in range(4)], "document_id string, text string"
+        ))
+        ids = [r["chunk_id"] for r in new.select("chunk_id").collect()]
+        store.update_chunk(ids[0], text=f"updated {i}")
+        store.delete_chunks(ids[1:3])
+        live += 2
+        plan = store.search(lid, "text 0-0", k=5)._jdf.queryExecution().optimizedPlan()
+        assert len(plan.toString().splitlines()) <= 30, (i, plan.toString())
+        assert store.chunks.count() == live
+
+
 def test_delete_cascades(populated):
     store, lid, dids = populated
     store.delete_document(dids["JWST"])
