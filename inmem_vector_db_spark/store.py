@@ -31,7 +31,7 @@ per-indexer locks, pickled per-library on every mutation
 
 Validation (reference P6, ``chunk.py:25-71`` etc.) happens at ingest:
 non-empty name/title/text, deduped non-empty tags, ``page >= 0``,
-non-empty 1-D embedding — failing the batch loudly rather than silently
+non-empty 1-D embedding without NaN — failing the batch loudly rather than silently
 dropping rows.
 
 Known reference bugs NOT reproduced (SURVEY.md 7.4): the batch-add
@@ -369,8 +369,11 @@ class LibraryStore:
                 F.when(F.coalesce(F.trim("text"), F.lit("")) == "", 1).otherwise(0)
             ).alias("bad_text"),
             F.sum(F.when(F.col("page") < 0, 1).otherwise(0)).alias("bad_page"),
-            F.sum(
-                F.when(F.size(F.coalesce("embedding", F.array())) == 0, 1).otherwise(0)
+            # no NaN either: an updated row is kept in a LocalRelation,
+            # which cannot hold NaN (literal_df)
+            F.sum(F.when(
+                (F.size(F.coalesce("embedding", F.array())) == 0)
+                | F.exists("embedding", lambda x: F.isnan(x)), 1).otherwise(0)
             ).alias("bad_emb"),
         ]
         stats = new.agg(*agg).head().asDict()
@@ -381,7 +384,7 @@ class LibraryStore:
         if stats.get("bad_page"):
             raise ValidationError("page must be >= 0")  # chunk.py:36-42
         if stats.get("bad_emb"):
-            raise ValidationError("embedding must be non-empty")  # chunk.py:63-71
+            raise ValidationError("embedding must be non-empty, without NaN")  # chunk.py:63-71
         new = new.drop("__doc_ok")
         self._segments.append(new)
         self._chunks_changed()

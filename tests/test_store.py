@@ -109,6 +109,24 @@ def test_validation_errors(spark, store):
         )
 
 
+def test_nan_embedding_rejected_at_ingest(spark, store):
+    """A NaN in a given embedding fails its batch: an updated chunk's
+    row is kept in a LocalRelation, which cannot hold NaN."""
+    lid = store.create_library("nan")
+    doc = store.add_documents(
+        lid, spark.createDataFrame([("d",)], "title string")
+    ).head()
+    with pytest.raises(ValidationError):
+        store.add_chunks(
+            lid,
+            spark.createDataFrame(
+                [(doc["document_id"], "t", [1.0, float("nan")])],
+                "document_id string, text string, embedding array<float>",
+            ),
+        )
+    assert store.chunks.isEmpty()
+
+
 def test_tag_dedup_and_empty_drop(spark, store):
     lid = store.create_library("t")
     doc = store.add_documents(
