@@ -31,8 +31,8 @@ per-indexer locks, pickled per-library on every mutation
 
 Validation (reference P6, ``chunk.py:25-71`` etc.) happens at ingest:
 non-empty name/title/text, deduped non-empty tags, ``page >= 0``,
-non-empty 1-D embedding without NaN — failing the batch loudly rather than silently
-dropping rows.
+non-empty 1-D embedding without NaN — failing the batch loudly rather
+than silently dropping rows.
 
 Known reference bugs NOT reproduced (SURVEY.md 7.4): the batch-add
 cross-document chunk-list pollution (``library.py:107``) and the
