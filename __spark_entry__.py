@@ -197,7 +197,7 @@ def _knn_postfilter_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     q = _query_vec(spark, sf_dir, 0)
     top50 = knn(emb, q, k=50, metric="euclidean", payload_cols=["label", "embedding"])
-    from inmem_vector_db_spark.functions.distance import cosine
+    from inmem_vector_db_spark.functions.distance import distance
 
     return (
         top50.filter(F.col("label") == 5)
@@ -205,7 +205,7 @@ def _knn_postfilter_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
         .select(
             "vec_id",
-            F.round(cosine(F.lit(q), F.col("embedding")), 6).alias("score"),
+            F.round(distance("cosine", q, "embedding"), 6).alias("score"),
         )
     )
 
@@ -2212,7 +2212,7 @@ def _ivf_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "crn",
             "vec_id",
-            distance("euclidean", F.col("__qvec"), F.col("embedding")).alias(
+            distance("euclidean", "__qvec", "embedding").alias(
                 "dist"
             ),
         )

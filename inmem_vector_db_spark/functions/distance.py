@@ -1,4 +1,4 @@
-"""Distance metrics as composable Column expressions (SURVEY.md 2.7 F1-F5).
+"""Distance metrics, each rendered as one SQL expression (SURVEY.md 2.7 F1-F5).
 
 Semantics match the reference's numpy kernels
 (``app/core/indexers/indexer.py:89-130``):
@@ -12,14 +12,29 @@ Semantics match the reference's numpy kernels
 
 Lower score = more similar for all four metrics.
 
-These are pure ``zip_with``/``aggregate`` expressions on the JVM — no
+``distance(metric, q, v)`` is the one way to build a metric.  Each
+operand is SQL text (a column name, a qualified name such as
+``a.embedding``, or an expression) or a sequence of floats, which is a
+query vector.  A query vector is rendered once as an ``array(<repr>D,
+...)`` literal, and for cosine its norm is folded driver-side into a
+literal with the same sequential left fold the SQL aggregate runs, so a
+constant norm is never re-aggregated per corpus row.  The metric comes
+back as one ``F.expr``: one parse per query, where building the same
+expression from Column calls cost one py4j round trip per query element
+(``F.lit(list)``) and more for every lambda.  ``nan`` and ``inf`` have
+no SQL literal, and a non-finite query value is rejected by position.
+
+The metrics are ``zip_with``/``aggregate`` expressions on the JVM — no
 Python round-trip — so a distance column over a 100 TB scan pipelines
 with the parquet reader.  Both are ``CodegenFallback`` expressions in
 Spark 4.1 (``ZipWith``, ``ArrayAggregate``): whole-stage codegen does
-not compile them, and they run interpreted inside the stage.  For dense
-multi-query matrix work (one query batch x one corpus partition) the
-vectorized numpy path in ``operators.knn`` beats per-row expressions;
-both produce identical doubles.
+not compile them, and they run interpreted inside the stage.  Do not
+unroll them into per-element arithmetic to get them compiled: a 64-term
+unrolled, fully codegen'd euclidean kNN was slower (0.89 s against
+0.42 s median), because every new query literal compiles a new class.
+For dense multi-query matrix work (one query batch x one corpus
+partition) the vectorized numpy path in ``operators.knn`` beats per-row
+expressions; both produce identical doubles.
 
 All arithmetic is performed in float64 regardless of the input array's
 element type (the reference stores float32 but numpy upcasts its
@@ -28,112 +43,89 @@ accumulations; float64 here also keeps the DuckDB oracle comparable).
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _d(v: Column | str) -> Column:
-    """Coerce an array column to array<double> for stable accumulation."""
-    c = F.col(v) if isinstance(v, str) else v
-    return c.cast("array<double>")
+def _sum(term: str) -> str:
+    """Template: the left-fold sum of ``term`` over (x, y) = (q[i], v[i])."""
+    return "aggregate(zip_with({q}, {v}, (x, y) -> " + term + "), 0.0D, (s, x) -> s + x)"
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
+def _norm(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0.0D, (s, x) -> s + x * x))"
 
 
-def l2_norm(v: Column | str) -> Column:
-    """||v||_2 as a Column expression."""
-    a = _d(v)
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, x: s + x * x))
+_DOT = _sum("x * y")
+# {q}/{v}: the operands as array<double>; {nq}/{nv}: their L2 norms
+METRICS = {
+    "euclidean": "sqrt(" + _sum("(x - y) * (x - y)") + ")",
+    "cosine": "CASE WHEN {nq} = 0.0D OR {nv} = 0.0D THEN 1.0D "
+              "ELSE 1.0D - " + _DOT + " / ({nq} * {nv}) END",
+    "dot_product": "(- " + _DOT + ")",
+    "manhattan": _sum("abs(x - y)"),
+}
 
 
-def l2_normalize(v: Column | str) -> Column:
+def vector_sql(values: Sequence[float]) -> str:
+    """``values`` as one ``array<double>`` literal.  ``nan`` and ``inf``
+    have no SQL literal: a non-finite value is rejected by position."""
+    vals = [float(e) for e in values]
+    for i, e in enumerate(vals):
+        if not math.isfinite(e):
+            raise ValueError(f"query vector value at position {i} is {e}; it must be finite")
+    return "array(" + ", ".join(f"{e!r}D" for e in vals) + ")"
+
+
+def _operand(x: str | Sequence[float]) -> tuple[str, str]:
+    """One operand as (array<double> SQL, its L2 norm as SQL).  A query
+    vector becomes one array literal, and its norm a literal folded left
+    to right as the SQL aggregate folds it."""
+    a = f"CAST({x if isinstance(x, str) else vector_sql(x)} AS ARRAY<DOUBLE>)"
+    if isinstance(x, str):
+        return a, _norm(a)
+    acc = 0.0
+    for e in x:
+        acc = acc + float(e) * float(e)
+    norm = math.sqrt(acc)
+    # a norm past the double range has no literal: the aggregate stays
+    return a, f"{norm!r}D" if math.isfinite(norm) else _norm(a)
+
+
+def distance_sql(metric: str, q: str | Sequence[float], v: str | Sequence[float]) -> str:
+    """``distance`` as SQL text, for callers that embed it in a larger
+    expression."""
+    try:
+        template = METRICS[metric]
+    except KeyError:
+        raise ValueError(
+            f"unknown metric {metric!r}; expected one of {sorted(METRICS)}"
+        ) from None
+    (a, na), (b, nb) = _operand(q), _operand(v)
+    return template.format(q=a, v=b, nq=na, nv=nb)
+
+
+def distance(metric: str, q: str | Sequence[float], v: str | Sequence[float]) -> Column:
+    """Dispatch by metric name (enum parity with reference
+    ``indexer.py:21-26``; validated like ``schemas/search.py:31-36``)."""
+    return F.expr(distance_sql(metric, q, v))
+
+
+def l2_norm(v: str | Sequence[float]) -> Column:
+    """||v||_2."""
+    return F.expr(_operand(v)[1])
+
+
+def l2_normalize(v: str | Sequence[float]) -> Column:
     """v / ||v||_2, with zero-vector guard (returns v unchanged if norm=0).
 
     Reference: HNSW normalizes at insert/query (``hnsw.py:116-117,299-300``);
     LSH normalizes before hashing (``lsh.py:340``).
     """
-    a = _d(v)
-    n = l2_norm(a)
-    return F.when(n == 0.0, a).otherwise(F.transform(a, lambda x: x / n))
-
-
-def euclidean(q: Column | str, v: Column | str) -> Column:
-    """L2 distance (reference ``indexer.py:106-108``)."""
-    a, b = _d(q), _d(v)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-    )
-
-
-def cosine(q: Column | str, v: Column | str, q_norm: float | None = None) -> Column:
-    """Cosine *distance* = 1 - cos_sim; 1.0 when either norm is zero
-    (reference ``indexer.py:110-122``).
-
-    ``q_norm``: pass the query's precomputed ||q|| when q is a literal —
-    otherwise the norm-of-a-constant aggregate is re-evaluated per
-    corpus row (Catalyst does not fold aggregates over literal arrays).
-    Must be the sequential left-fold sum to bit-match the expression.
-    """
-    a, b = _d(q), _d(v)
-    na = F.lit(q_norm) if q_norm is not None else l2_norm(a)
-    nb = l2_norm(b)
-    return F.when((na == 0.0) | (nb == 0.0), F.lit(1.0)).otherwise(
-        F.lit(1.0) - _dot(a, b) / (na * nb)
-    )
-
-
-def dot_product(q: Column | str, v: Column | str) -> Column:
-    """Negated dot product so ascending = most similar
-    (reference ``indexer.py:124-126``)."""
-    return -_dot(_d(q), _d(v))
-
-
-def manhattan(q: Column | str, v: Column | str) -> Column:
-    """L1 distance (reference ``indexer.py:128-130``)."""
-    a, b = _d(q), _d(v)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.abs(x - y)), F.lit(0.0), lambda s, x: s + x
-    )
-
-
-METRICS = {
-    "euclidean": euclidean,
-    "cosine": cosine,
-    "dot_product": dot_product,
-    "manhattan": manhattan,
-}
-
-
-def distance(
-    metric: str,
-    q: Column | str,
-    v: Column | str,
-    query_vec=None,
-) -> Column:
-    """Dispatch by metric name (enum parity with reference
-    ``indexer.py:21-26``; validated like ``schemas/search.py:31-36``).
-
-    ``query_vec``: the raw query values when q is a literal column —
-    lets cosine fold ||q|| into a scalar literal driver-side instead of
-    re-aggregating a constant per corpus row."""
-    try:
-        fn = METRICS[metric]
-    except KeyError:
-        raise ValueError(
-            f"unknown metric {metric!r}; expected one of {sorted(METRICS)}"
-        ) from None
-    if metric == "cosine" and query_vec is not None:
-        # sequential left-fold, matching the Column aggregate bit-for-bit
-        acc = 0.0
-        for x in query_vec:
-            acc = acc + float(x) * float(x)
-        return cosine(q, v, q_norm=acc**0.5)
-    return fn(q, v)
+    a, n = _operand(v)
+    # the norm sits inside the lambda, so its variable must not shadow
+    # a column the operand names
+    return F.expr(f"CASE WHEN {n} = 0.0D THEN {a} ELSE transform({a}, __e -> __e / {n}) END")

@@ -501,7 +501,7 @@ def kmeans_inertia(
     Lloyd iterations monotonically decrease (tested)."""
     from pyspark.sql import functions as F
 
-    from inmem_vector_db_spark.functions.distance import euclidean
+    from inmem_vector_db_spark.functions.distance import distance
 
     assigned = ivf_assign(corpus, cids, cmat, id_col, vec_col)
     from inmem_vector_db_spark.functions.localframe import literal_df
@@ -514,7 +514,7 @@ def kmeans_inertia(
     )
     return (
         assigned.join(F.broadcast(cdf), "cluster_id")
-        .select(F.pow(euclidean(F.col(vec_col), F.col("__c")), 2).alias("d2"))
+        .select(F.pow(distance("euclidean", vec_col, "__c"), 2).alias("d2"))
         .agg(F.sum("d2"))
         .head()[0]
     )
@@ -654,7 +654,7 @@ def ivf_search_batch(
         .select(
             query_id_col,
             F.col(id_col),
-            distance(metric, F.col("__qvec"), F.col(vec_col)).alias("dist"),
+            distance(metric, "__qvec", vec_col).alias("dist"),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(

@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from inmem_vector_db_spark.functions.distance import cosine
+from inmem_vector_db_spark.functions.distance import distance
 from inmem_vector_db_spark.functions.text import (
     fingerprint,
     minhash_signature,
@@ -655,7 +655,7 @@ def embedding_near_dup_pairs(
             a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
             .withColumn(
                 "cos_dist",
-                F.round(cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 6),
+                F.round(distance("cosine", f"a.{vec_col}", f"b.{vec_col}"), 6),
             )
             .filter(F.col("cos_dist") <= max_cosine_dist)
             .select(
@@ -787,7 +787,7 @@ def embedding_near_dup_pairs_lsh(
     return (
         cand.join(vecs.withColumnsRenamed({id_col: "id_a", vec_col: "__va"}), "id_a")
         .join(vecs.withColumnsRenamed({id_col: "id_b", vec_col: "__vb"}), "id_b")
-        .withColumn("cos_dist", F.round(cosine(F.col("__va"), F.col("__vb")), 6))
+        .withColumn("cos_dist", F.round(distance("cosine", "__va", "__vb"), 6))
         .filter(F.col("cos_dist") <= max_cosine_dist)
         .select("id_a", "id_b", "cos_dist")
     )
@@ -860,7 +860,7 @@ def semantic_dedup_pairs(
         )
         .withColumn(
             "cos_dist",
-            F.round(cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 6),
+            F.round(distance("cosine", f"a.{vec_col}", f"b.{vec_col}"), 6),
         )
         .filter(F.col("cos_dist") <= max_cosine_dist)
         .select(

@@ -17,9 +17,10 @@ Spark-first design:
 * **Multi query** (``knn_join``) — broadcast the (small) query side into a
   nested-loop join, then per-query top-k.  Two implementations:
 
-  - ``knn_join``: pure Column expressions + window ``row_number() <= k``.
-    JVM-only (its ``zip_with``/``aggregate`` distance runs interpreted
-    inside the stage), oracle-exact, but the window shuffles
+  - ``knn_join``: one SQL distance expression over the two vector
+    columns + window ``row_number() <= k``.  JVM-only (its
+    ``zip_with``/``aggregate`` distance runs interpreted inside the
+    stage), oracle-exact, but the window shuffles
     |corpus| x |queries| candidate rows by query_id — fine for modest
     fan-outs, wrong at 100 TB.
 
@@ -43,16 +44,12 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from inmem_vector_db_spark.functions.distance import METRICS, distance
+from inmem_vector_db_spark.functions.distance import METRICS, distance, distance_sql
 from inmem_vector_db_spark.operators.arrowmat import flat_matrix
 
 
-def _query_lit(query_vec: Sequence[float]):
-    return F.lit([float(x) for x in query_vec])
-
-
-def _dim_guard(vec_col: str, dim: int) -> F.Column:
-    """Fail loudly on NULL or dimension-mismatched embeddings.
+def _dim_guard(vec_col: str, dim: int, dist: str) -> str:
+    """``dist``, failing loudly on NULL or dimension-mismatched embeddings.
     ``zip_with`` pads the shorter array with NULLs, which would otherwise
     propagate to a NULL distance that sorts FIRST ascending — silently
     corrupting top-k.  A NULL embedding is the same hazard: ``size(NULL)
@@ -61,14 +58,10 @@ def _dim_guard(vec_col: str, dim: int) -> F.Column:
     The reference validates at insert (``chunk.py:63-71``,
     ``hnsw.py:553-563``); we validate at query time, JVM-side, with no
     extra pass."""
-    return F.when(
-        F.col(vec_col).isNull() | (F.size(F.col(vec_col)) != dim),
-        F.raise_error(
-            F.concat(
-                F.lit(f"embedding dimension mismatch: query dim={dim}, corpus dim="),
-                F.coalesce(F.size(F.col(vec_col)).cast("string"), F.lit("NULL")),
-            )
-        ),
+    return (
+        f"CASE WHEN {vec_col} IS NULL OR size({vec_col}) != {dim} THEN raise_error(concat("
+        f"'embedding dimension mismatch: query dim={dim}, corpus dim=', "
+        f"coalesce(CAST(size({vec_col}) AS STRING), 'NULL'))) ELSE {dist} END"
     )
 
 
@@ -88,10 +81,8 @@ def knn(
     """
     if k <= 0:
         raise ValueError("k must be > 0")
-    qlit = _query_lit(query_vec)
-    dist = _dim_guard(vec_col, len(query_vec)).otherwise(
-        distance(metric, qlit, F.col(vec_col), query_vec=query_vec)
-    )
+    # one SQL string, one parse: guard, query literal and metric
+    dist = F.expr(_dim_guard(vec_col, len(query_vec), distance_sql(metric, query_vec, vec_col)))
     cols = [F.col(id_col), *[F.col(c) for c in payload_cols], dist.alias("dist")]
     # orderBy + limit => TakeOrderedAndProject (partition-local top-k,
     # driver merge): no corpus shuffle.  asc_nulls_last: belt-and-braces
@@ -125,7 +116,7 @@ def knn_join(
             F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
         )
     )
-    dist = distance(metric, F.col("__qvec"), F.col(vec_col))
+    dist = distance(metric, "__qvec", vec_col)
     scored = corpus.crossJoin(q).select(
         F.col("__qid").alias(query_id_col),
         F.col(id_col),

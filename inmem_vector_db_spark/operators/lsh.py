@@ -278,7 +278,7 @@ class RandomHyperplaneLSH:
             .select(
                 query_id_col,
                 id_col,
-                distance(metric, F.col("__qvec"), F.col(vec_col)).alias("dist"),
+                distance(metric, "__qvec", vec_col).alias("dist"),
             )
         )
         w = Window.partitionBy(query_id_col).orderBy("dist", id_col)

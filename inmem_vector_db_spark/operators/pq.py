@@ -38,6 +38,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inmem_vector_db_spark.functions.distance import vector_sql
 from inmem_vector_db_spark.operators.arrowmat import (
     flat_matrix,
     int_list_array,
@@ -161,12 +162,12 @@ def pq_search(
         for i in range(dsub):  # fixed order == SQL left fold
             diff = q[j * dsub + i] - codebooks[j][:, i]
             d += diff * diff
-        luts.append([float(x) for x in d])
+        luts.append(d)
 
-    adc = None
-    for j in range(m):
-        term = F.element_at(F.lit(luts[j]), F.col("codes").getItem(j) + 1)
-        adc = term if adc is None else adc + term
+    # one parse: m literal-array lookups, summed left to right
+    adc = F.expr(" + ".join(
+        f"element_at({vector_sql(luts[j])}, codes[{j}] + 1)" for j in range(m)
+    ))
 
     approx = (
         codes_df.select(id_col, adc.alias("adc_d"))

@@ -1674,7 +1674,7 @@ ORDER BY bm25 DESC, doc_id LIMIT 10
 def hybrid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from inmem_vector_db_spark.functions.distance import cosine
+    from inmem_vector_db_spark.functions.distance import distance
     from inmem_vector_db_spark.sources.loader import load_table as _lt
 
     # each leg: top-50 via orderBy+limit (TakeOrderedAndProject — a
@@ -1696,7 +1696,7 @@ def hybrid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = [float(x) for x in qrow["embedding"]]
     scored = emb.select(
         F.col("vec_id").alias("doc_id"),
-        F.round(cosine(F.lit(qv), F.col("embedding")), 6).alias("d"),
+        F.round(distance("cosine", qv, "embedding"), 6).alias("d"),
     )
     vec = (
         scored.orderBy("d", "doc_id")

@@ -11,8 +11,9 @@ per-indexer locks, pickled per-library on every mutation
   reference: one ``{id: row}`` dict each is the table of record, every
   mutation is a dict operation that runs no Spark job, and the table
   reads as a DataFrame (one LocalRelation, built on the first read after
-  a mutation).  They must fit in driver memory anyway: ``add_chunks``
-  and ``search`` broadcast the documents table;
+  a mutation).  They must fit in driver memory anyway: ``search``
+  broadcasts the documents table, and ``add_chunks`` checks its batch's
+  document ids against the dict;
 * chunks are kept the same way, with distributed rows: the table of
   record is one ``localCheckpoint``ed segment per ``add_chunks`` batch,
   a driver-side ``{chunk_id: row}`` map of updated rows and one keep
@@ -52,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from inmem_vector_db_spark.functions.distance import distance
+from inmem_vector_db_spark.functions.distance import METRICS, distance
 from inmem_vector_db_spark.functions.localframe import literal_df
 from inmem_vector_db_spark.sources.embedding import DEFAULT_DIM, hash_embed_texts, hash_embedding_expr
 
@@ -74,7 +75,6 @@ _TABLES = ("libraries", "documents", "chunks")
 # folds the view into a single segment (an ingest round makes three)
 _FOLD_AFTER = 8
 
-METRICS = ("euclidean", "cosine", "dot_product", "manhattan")
 INDEXER_TYPES = ("flat", "lsh")  # hnsw intentionally absent, SURVEY.md 7.3
 
 
@@ -338,9 +338,6 @@ class LibraryStore:
         batched provider (S5).  Every document_id must exist — the whole
         batch is rejected otherwise (``chunk_service.py:77-83``)."""
         self._require_library(library_id)
-        docs = self.documents.filter(F.col("library_id") == library_id).select(
-            "document_id", F.lit(True).alias("__doc_ok")
-        )
         # the new rows as ONE projection in chunks column order: the
         # input's columns, typed nulls for absent ones, generated values
         given = set(rows.columns)
@@ -354,17 +351,16 @@ class LibraryStore:
             embedding=(cols["embedding"] if "embedding" in given
                        else hash_embedding_expr("text", self.dim)).cast("array<float>"),
         )
-        new = rows.join(F.broadcast(docs), "document_id", "left").select(
-            *[c.alias(n) for n, c in cols.items()], "__doc_ok"
-        )
-        # ONE source scan AND one job: ids + embeddings + validation flag
-        # materialize together under the validation aggregate below
-        # (eager=False checkpoint rides along with the first action).
-        # The old shape ran a separate validation pass first — a full
-        # extra scan + embed of the batch.
+        new = rows.select(*[c.alias(n) for n, c in cols.items()])
+        # ONE source scan AND one aggregate: ids + embeddings materialize
+        # together under the validation aggregate below (eager=False
+        # checkpoint rides along with the first action).  The batch's
+        # document ids come back in it, to be checked against the
+        # driver-side catalog.
         new = new.localCheckpoint(eager=False)
         agg = [
-            F.sum(F.when(F.col("__doc_ok").isNull(), 1).otherwise(0)).alias("dangling"),
+            F.collect_set("document_id").alias("doc_ids"),
+            F.sum(F.when(F.col("document_id").isNull(), 1).otherwise(0)).alias("null_doc"),
             F.sum(
                 F.when(F.coalesce(F.trim("text"), F.lit("")) == "", 1).otherwise(0)
             ).alias("bad_text"),
@@ -377,7 +373,10 @@ class LibraryStore:
             ).alias("bad_emb"),
         ]
         stats = new.agg(*agg).head().asDict()
-        if stats["dangling"]:
+        docs = self._rows["documents"]
+        if stats["null_doc"] or any(
+            docs.get(d, {}).get("library_id") != library_id for d in stats["doc_ids"]
+        ):
             raise KeyError("batch references unknown document_id(s)")  # chunk_service.py:77-83
         if stats["bad_text"]:
             raise ValidationError("chunk text must be non-empty")  # chunk.py:55-61
@@ -385,7 +384,6 @@ class LibraryStore:
             raise ValidationError("page must be >= 0")  # chunk.py:36-42
         if stats.get("bad_emb"):
             raise ValidationError("embedding must be non-empty, without NaN")  # chunk.py:63-71
-        new = new.drop("__doc_ok")
         self._segments.append(new)
         self._chunks_changed()
         return new
@@ -487,9 +485,8 @@ class LibraryStore:
         rank)."""
         if k <= 0:
             raise ValidationError("k must be > 0")
-        qlit = F.lit(self._embed(query_text))
         scored = self.chunks.withColumn(
-            "score", distance(metric, qlit, F.col("embedding"))
+            "score", distance(metric, self._embed(query_text), "embedding")
         )
         w = Window.partitionBy("library_id").orderBy("score", tie_col)
         return (
@@ -529,15 +526,15 @@ class LibraryStore:
         if k <= 0:
             raise ValidationError("k must be > 0")  # schemas/search.py:38-43
         if metric not in METRICS:
-            raise ValidationError(f"metric must be one of {METRICS}")
+            raise ValidationError(f"metric must be one of {tuple(METRICS)}")
         self._require_library(library_id)
-        qlit = F.lit(self._embed(query_text))
+        qvec = self._embed(query_text)
 
         base = self.chunks.filter(F.col("library_id") == library_id)
         rank_metric = "euclidean" if parity else metric
         if filter_tags and not parity:
             base = base.filter(tags_superset(F.col("tags"), filter_tags))
-        scored = base.withColumn("__rank_d", distance(rank_metric, qlit, F.col("embedding")))
+        scored = base.withColumn("__rank_d", distance(rank_metric, qvec, "embedding"))
         # orderBy+limit => TakeOrderedAndProject (partition-local top-k,
         # driver merge — no corpus shuffle); the window then ranks only
         # the k survivors, not the corpus.
@@ -549,7 +546,7 @@ class LibraryStore:
         if filter_tags and parity:
             # reference order: slice to k first, then filter (P2) — no backfill
             topk = topk.filter(tags_superset(F.col("tags"), filter_tags))
-        out = topk.withColumn("score", distance(metric, qlit, F.col("embedding")))
+        out = topk.withColumn("score", distance(metric, qvec, "embedding"))
 
         # enrichment join (J5): chunk -> parent document title
         docs = self.documents.select("document_id", F.col("title").alias("doc_title"))

@@ -41,10 +41,8 @@ def np_reference(metric: str, q, v) -> float:
 @given(q=vec, v=vec)
 def test_distance_matches_numpy(spark, metric, q, v):
     df = spark.createDataFrame([(v,)], "v array<double>")
-    from pyspark.sql import functions as F
-
     got = df.select(
-        distance(metric, F.lit(q).cast("array<double>"), F.col("v")).alias("d")
+        distance(metric, q, "v").alias("d")
     ).head()["d"]
     want = np_reference(metric, q, v)
     assert got == pytest.approx(want, rel=1e-9, abs=1e-9) or (
@@ -55,10 +53,8 @@ def test_distance_matches_numpy(spark, metric, q, v):
 @settings(max_examples=10, deadline=None, derandomize=True, suppress_health_check=list(HealthCheck))
 @given(q=vec)
 def test_zero_vector_cosine_is_one(spark, q):
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame([([0.0] * DIM,)], "v array<double>")
     got = df.select(
-        distance("cosine", F.lit(q).cast("array<double>"), F.col("v")).alias("d")
+        distance("cosine", q, "v").alias("d")
     ).head()["d"]
     assert got == 1.0

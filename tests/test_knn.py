@@ -176,3 +176,15 @@ def test_mmr_rerank_k_capped_by_candidates(spark):
         "query_id long, vec_id long, rel double, embedding array<float>",
     )
     assert mmr_rerank(cand, k=5).count() == 2
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "cosine"])
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_knn_rejects_non_finite_query(spark, metric, bad):
+    """nan/inf have no SQL literal, and a NaN query distance used to rank
+    the lowest ids first: the query is rejected, naming the position."""
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(5)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="position 0"):
+        knn(corpus, [bad, 0.0], k=3, metric=metric)

@@ -99,6 +99,22 @@ def test_validation_errors(spark, store):
                 [("no-such-doc", "text")], "document_id string, text string"
             ),
         )
+    with pytest.raises(KeyError):  # a NULL document_id dangles too
+        store.add_chunks(
+            lid,
+            spark.createDataFrame(
+                [(doc["document_id"], "t"), (None, "text")],
+                "document_id string, text string",
+            ),
+        )
+    other = store.create_library("other")
+    with pytest.raises(KeyError):  # a document of another library
+        store.add_chunks(
+            other,
+            spark.createDataFrame(
+                [(doc["document_id"], "text")], "document_id string, text string"
+            ),
+        )
     with pytest.raises(ValidationError):
         store.add_chunks(
             lid,
@@ -421,6 +437,39 @@ def test_catalog_mutations_build_only_their_batch(spark, store, monkeypatch):
     assert built == [20]
     assert store.documents is docs and built == [20]
     assert docs.count() == 20
+
+
+def test_add_chunks_checks_documents_without_their_view(spark, store, monkeypatch):
+    """``add_chunks`` right after ``add_documents`` checks the batch's
+    document ids against the driver-side catalog: the documents view is
+    not built, and the batch costs one aggregate (at most two jobs)."""
+    import inmem_vector_db_spark.store as store_mod
+    from inmem_vector_db_spark.functions.localframe import literal_df
+
+    lid = store.create_library("lib")
+    docs = store.add_documents(lid, literal_df(spark, [("a",), ("b",)], "title string"))
+    dids = [r["document_id"] for r in docs.collect()]
+    batch = literal_df(
+        spark, [(dids[i % 2], f"chunk {i}") for i in range(4)],
+        "document_id string, text string",
+    )
+    built = []
+
+    def counting_literal_df(spark_, rows, schema):
+        built.append(schema)
+        return literal_df(spark_, rows, schema)
+
+    monkeypatch.setattr(store_mod, "literal_df", counting_literal_df)
+    sc = spark.sparkContext
+    group = "test-add-chunks-jobs"
+    sc.setJobGroup(group, "add_chunks after add_documents")
+    try:
+        store.add_chunks(lid, batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert store_mod.DOCUMENTS_SCHEMA not in built
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert store.chunks.count() == 4
 
 
 def test_search_all_libraries(spark, populated):
