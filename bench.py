@@ -99,8 +99,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         warmup(spark, sf_dir)
-    except Exception:
-        pass  # warmup is best-effort; timings just run colder
+    except Exception as exc:
+        # best-effort: timings just run colder, but the failure is named
+        print(f"bench: warmup FAILED: {type(exc).__name__}: {exc}", file=sys.stderr)
 
     # Default 1 pass: the suite is ~200 queries and min-of-2 over all of
     # them doubles the wall past 10 minutes; cross-round comparisons

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from inmem_vector_db_spark.functions.localframe import literal_df
+
 MEDIA_SCHEMA = (
     "media_id string, modality string, payload binary, "
     "meta struct<source string, width int, height int, duration_s double, "
@@ -50,8 +52,9 @@ MODALITIES = ("image", "audio", "video")
 def make_media_table(spark, rows) -> DataFrame:
     """Build a media DataFrame from (media_id, modality, payload, meta)
     tuples — the ingest shape; real pipelines land the same schema from
-    parquet/webdataset."""
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    parquet/webdataset.  The rows become a LocalRelation
+    (``literal_df``): no pickled Python RDD to evaluate per query."""
+    return literal_df(spark, rows, MEDIA_SCHEMA)
 
 
 def _decode_png(payload: bytes) -> np.ndarray:

@@ -1,3 +1,3 @@
-from inmem_vector_db_spark.operators.knn import knn, knn_join, knn_join_vectorized
+from inmem_vector_db_spark.operators.knn import knn, knn_join_vectorized
 
-__all__ = ["knn", "knn_join", "knn_join_vectorized"]
+__all__ = ["knn", "knn_join_vectorized"]

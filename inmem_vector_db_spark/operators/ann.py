@@ -13,8 +13,8 @@ Arrow batch, no shuffle).
 
 Centroid selection here is deterministic-from-data (every ``stride``-th
 vector id) rather than k-means, so results are exactly reproducible and
-DuckDB-oracle-expressible.  A k-means refinement would slot in without
-changing the search path.
+DuckDB-oracle-expressible.  A k-means refinement
+(``kmeans.lloyd_iterations``) slots in without changing the search path.
 """
 
 from __future__ import annotations
@@ -176,10 +176,13 @@ def write_ivf_index(
         path/centroids/            (cid, centroid) — broadcast-class
         path/vectors/cluster_id=*/ the inverted lists
 
-    A probe then reads exactly ``nprobe`` directories: the cluster_id
-    filter is a PARTITION filter, so Spark lists and scans only the
-    probed lists — IO proportional to |probed lists|, independent of
-    corpus size.  This is the build job (reference analog: the
+    A probe then scans exactly ``nprobe`` directories: the cluster_id
+    filter is a PARTITION filter, so the data read is proportional to
+    |probed lists|.  Pruning bounds the scan, not the listing: every
+    search still lists all ``cluster_id=`` directories and infers the
+    vectors schema before the filter prunes (2.1-2.8 s per warm search
+    at 400 lists on a 4-vCPU host), so a search's fixed cost grows with
+    the list count.  This is the build job (reference analog: the
     build-once indexer artifact / rebuild job M10); searches against
     the artifact never re-assign or re-shuffle the corpus.
 
@@ -454,40 +457,18 @@ def ivf_search_indexed(
     """Serve a query from a written IVF artifact (``write_ivf_index``):
     read the (bounded) centroid table, pick the ``nprobe`` nearest lists
     driver-side, scan ONLY those ``cluster_id=`` partitions (partition
-    pruning — plan-pinned in tests), exact top-k inside them."""
+    pruning — plan-pinned in tests), exact top-k inside them.
+
+    The scan is bounded by the probed lists; the listing is not.  The
+    ``vectors`` read discovers every ``cluster_id=`` directory and
+    infers the schema before the filter prunes, so each search pays a
+    cost that grows with the list count, whatever ``nprobe`` is."""
     cids, cmat = _read_centroids(spark, path)
     probe = probe_lists(cids, cmat, query_vec, nprobe)
     vecs = spark.read.parquet(f"{path}/vectors").filter(
         F.col("cluster_id").isin(probe)
     )
     return knn(vecs, query_vec, k=k, metric=metric, id_col=id_col, vec_col=vec_col)
-
-
-def kmeans_refine(
-    corpus: DataFrame,
-    cids: Sequence,
-    cmat: np.ndarray,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[list, np.ndarray]:
-    """Lloyd's k-means starting from the deterministic stride centroids
-    — the refinement step that upgrades IVF list balance without
-    changing the search path.  Thin wrapper over the single Lloyd
-    implementation (``operators.kmeans.lloyd_iterations``): exact
-    scaled-integer centroid updates, so the shuffle carries
-    partitions x k partial rows (never the n x dim exploded corpus an
-    avg-over-posexplode update would move) and the result is
-    bit-identical under any partitioning or input order.  Centroid ids
-    stay the original seeds' ids (k fixed, empty clusters keep their
-    previous position), so the result plugs into
-    ``ivf_assign``/``ivf_search`` unchanged."""
-    from inmem_vector_db_spark.operators.kmeans import lloyd_iterations
-
-    return lloyd_iterations(
-        corpus, list(cids), cmat, iters=iterations,
-        id_col=id_col, vec_col=vec_col,
-    )
 
 
 def kmeans_inertia(

@@ -4,7 +4,7 @@ n-gram Jaccard, embedding-cosine near-dup.
 
 Scale design: every variant is generate-candidates -> verify.  Candidate
 generation is an equi-join on a compact key (hash / band bucket / simhash
-band / LSH bucket), so the shuffle moves keys not documents; only
+band / IVF cluster id), so the shuffle moves keys not documents; only
 verified candidate PAIRS ever see both texts.  No operator here compares
 all N^2 pairs at scale (the brute-force verifiers exist for small-sf
 oracle parity only).
@@ -645,8 +645,8 @@ def embedding_near_dup_pairs(
     oracle-shaped reference path.
 
     Exact = O(N^2) work by definition: affordable to ~10^6-10^7 vectors.
-    At 100 TB block first (``embedding_near_dup_pairs_lsh`` buckets or
-    IVF cluster ids) and use this as the exact within-bucket verifier.
+    At 100 TB block first: ``semantic_dedup_pairs`` clusters by IVF
+    centroid and runs the same exact cosine only within a cluster.
     """
     if not vectorized:
         base = df.select(F.col(id_col), F.col(vec_col))
@@ -744,52 +744,6 @@ def embedding_near_dup_pairs(
         keyed.repartition(n_par, "__bi", "__bj")
         .groupBy("__bi", "__bj")
         .applyInPandas(block_pair, schema=out_schema)
-    )
-
-
-def embedding_near_dup_pairs_lsh(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    max_cosine_dist: float = 0.2,
-    num_tables: int = 8,
-    hash_size: int = 6,
-    seed: int = 42,
-) -> DataFrame:
-    """The 100 TB path for embedding near-dup: LSH bucket blocking first,
-    exact cosine verification only WITHIN buckets.
-
-    Work drops from O(N^2) to O(sum over buckets of b^2); with sign-bit
-    LSH, near-identical vectors (cos_dist <= 0.2 ~ angle <= 37deg) share
-    a bucket in at least one of ``num_tables`` tables with high
-    probability.  Output schema matches ``embedding_near_dup_pairs``;
-    results are a high-recall SUBSET of the exact pairs (no fallback —
-    measured against the exact path in tests)."""
-    from inmem_vector_db_spark.operators.lsh import RandomHyperplaneLSH
-
-    dim = len(df.select(vec_col).head()[0])
-    lsh = RandomHyperplaneLSH(dim, num_tables=num_tables, hash_size=hash_size, seed=seed)
-    index = lsh.build_index(df, id_col=id_col, vec_col=vec_col)
-    a, b = index.alias("a"), index.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    vecs = df.select(id_col, vec_col)
-    return (
-        cand.join(vecs.withColumnsRenamed({id_col: "id_a", vec_col: "__va"}), "id_a")
-        .join(vecs.withColumnsRenamed({id_col: "id_b", vec_col: "__vb"}), "id_b")
-        .withColumn("cos_dist", F.round(distance("cosine", "__va", "__vb"), 6))
-        .filter(F.col("cos_dist") <= max_cosine_dist)
-        .select("id_a", "id_b", "cos_dist")
     )
 
 

@@ -1,175 +1,29 @@
 """Fuzzy string self-join: all pairs within a levenshtein threshold,
 without the O(N^2) cross join.
 
-PassJoin-style segment filter (Li, Deng & Feng, ICDE 2011 — public
-algorithm): split every string into ``d+1`` contiguous segments.  If
-``lev(u, v) <= d``, an optimal edit script has at most ``d`` edits, so
-by pigeonhole at least one of u's ``d+1`` segments is untouched — it
-appears verbatim in v, shifted by at most ``d`` positions (the net
-insert/delete count before it).  Therefore an equi-join of u's
-segments against ALL substrings of v (of the matching lengths, within
-a ±d start-position window) is a LOSSLESS candidate generator, and an
-exact ``levenshtein`` verify finishes the job.
+Deletion-neighbourhood signature join (the SymSpell/FastSS family —
+public algorithm): every distinct string value explodes into the
+strings reachable by deleting up to ``d`` characters, and two values
+within distance ``d`` always share one such variant.  An equi-join on
+the variant is therefore a LOSSLESS candidate generator, and an exact
+``levenshtein`` verify finishes the job.  The DuckDB oracle for the
+query entry (``fuzzy_name_pairs``) is the NAIVE all-pairs filter — a
+value-hash match against it proves the blocking lossless, not just
+plausible.
 
-Spark shape: two expression-only exploded projections (segments and
-windows — ~``(d+1) + len·|lens|`` rows per string, a constant factor,
-never N^2), one equi-join ON SEGMENT CONTENT (selective keys, plain
-shuffle, AQE-skew-splittable), distinct on the pair, then a verify
-join back to the strings.  The DuckDB oracle for the query entry is
-the NAIVE all-pairs filter — a value-hash match against it proves the
-blocking lossless, not just plausible.
-
-Strings shorter than ``d+1`` characters can have empty segments, so
-they take a separate brute-force leg against the (by the length
-filter, length <= 2d) short strings — a bounded set joined on a
-length-bucket key, never a full cross join.
+Why deletions and not a PassJoin segment filter (Li, Deng & Feng,
+ICDE 2011): PassJoin's candidate key is a ~(len/(d+1))-char SUBSTRING.
+On short strings over a small vocabulary (TPC-H part names: ~9 chars
+drawn from ~92 words) those keys are so low-entropy that the candidate
+equi-join degenerates toward N^2 (measured 147 s at sf0.1 against 2 s
+for deletion signatures, which keep len-d characters).  Deletion
+signatures cost up to n(n-1)/2 rows per string at d = 2, so long
+strings (n >~ 30) or radii above 2 are out of scope.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def fuzzy_self_join(
-    df: DataFrame,
-    id_col: str,
-    str_col: str,
-    max_dist: int = 2,
-) -> DataFrame:
-    """All unordered pairs ``(id_a, id_b, dist)`` with
-    ``levenshtein <= max_dist`` (exact — blocking is lossless).
-
-    ``id_a < id_b``; ties in content still produce one row per id pair.
-    """
-    if max_dist < 0:
-        raise ValueError("max_dist must be >= 0")
-    d = int(max_dist)
-    nseg = d + 1
-
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(str_col).alias("s"),
-        F.length(str_col).alias("n"),
-    )
-    long_s = base.where(F.col("n") >= nseg)
-
-    # segments: i-th of d+1 even chunks (first n%nseg chunks one longer)
-    seg = (
-        long_s.select(
-            "id",
-            "s",
-            "n",
-            F.explode(F.sequence(F.lit(0), F.lit(d))).alias("i"),
-        )
-        .withColumn(
-            "seg_len",
-            (F.col("n") / nseg).cast("int")
-            + (F.col("i") < F.col("n") % nseg).cast("int"),
-        )
-        .withColumn(
-            "seg_start",
-            (F.col("n") / nseg).cast("int") * F.col("i")
-            + F.least(F.col("i"), F.col("n") % nseg),
-        )
-        .select(
-            F.col("id").alias("id_u"),
-            F.col("n").alias("n_u"),
-            F.expr("substring(s, seg_start + 1, seg_len)").alias("chunk"),
-            "seg_start",
-            "seg_len",
-        )
-        .where(F.col("seg_len") >= 1)
-    )
-
-    # windows: every substring whose length any peer's segment can have
-    # (peer length within ±d → segment lengths floor((n-d)/nseg) ..
-    # ceil((n+d)/nseg)), at every start offset
-    win = (
-        long_s.select(
-            "id",
-            "s",
-            "n",
-            F.explode(
-                F.sequence(
-                    F.greatest(
-                        F.lit(1), F.floor((F.col("n") - d) / nseg).cast("int")
-                    ),
-                    F.ceil((F.col("n") + d) / nseg).cast("int"),
-                )
-            ).alias("w_len"),
-        )
-        .where(F.col("w_len") <= F.col("n"))
-        .select(
-            "id",
-            "s",
-            "n",
-            "w_len",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n") - F.col("w_len"))
-            ).alias("w_start"),
-        )
-        .select(
-            F.col("id").alias("id_v"),
-            F.col("n").alias("n_v"),
-            F.expr("substring(s, w_start + 1, w_len)").alias("chunk"),
-            "w_start",
-        )
-    )
-
-    cand_long = (
-        seg.join(
-            win,
-            (seg.chunk == win.chunk)
-            & (seg.id_u != win.id_v)
-            & (F.abs(seg.n_u - win.n_v) <= d)
-            & (F.abs(seg.seg_start - win.w_start) <= d),
-        )
-        .select(
-            F.least("id_u", "id_v").alias("id_a"),
-            F.greatest("id_u", "id_v").alias("id_b"),
-        )
-        .distinct()
-    )
-
-    # short-string leg: |u| < d+1 ⇒ any match has length <= |u|+d <= 2d.
-    # Equi-join on EXACT candidate length (u explodes its ±d length
-    # window) — a hash join on a tiny-domain key, not a nested loop.
-    short_s = base.where(F.col("n") < nseg)
-    near_short = base.where(F.col("n") <= 2 * d)
-    cand_short = (
-        short_s.select(
-            F.col("id").alias("id_u"),
-            F.explode(
-                F.sequence(
-                    F.greatest(F.lit(0), F.col("n") - d), F.col("n") + d
-                )
-            ).alias("nk"),
-        )
-        .join(
-            near_short.select(
-                F.col("id").alias("id_v"), F.col("n").alias("nk")
-            ),
-            "nk",
-        )
-        .where(F.col("id_u") != F.col("id_v"))
-        .select(
-            F.least("id_u", "id_v").alias("id_a"),
-            F.greatest("id_u", "id_v").alias("id_b"),
-        )
-        .distinct()
-    )
-
-    cand = cand_long.unionByName(cand_short).distinct()
-
-    sa = base.select(F.col("id").alias("id_a"), F.col("s").alias("s_a"))
-    sb = base.select(F.col("id").alias("id_b"), F.col("s").alias("s_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("dist", F.levenshtein("s_a", "s_b"))
-        .where(F.col("dist") <= d)
-        .select("id_a", "id_b", "dist")
-    )
 
 
 def _delete_variants(s, n, d: int):
@@ -205,33 +59,26 @@ def _delete_variants(s, n, d: int):
     return F.array_distinct(out)
 
 
-def fuzzy_self_join_deletes(
+def fuzzy_self_join(
     df: DataFrame,
     id_col: str,
     str_col: str,
     max_dist: int = 2,
 ) -> DataFrame:
-    """All unordered pairs within a levenshtein threshold via the
-    deletion-neighborhood signature join (the SymSpell/FastSS family —
-    public algorithm).  Exact: blocking is lossless, verified by
-    ``levenshtein``.
+    """All unordered pairs ``(id_a, id_b, dist)`` with ``levenshtein <=
+    max_dist`` (exact — blocking is lossless, verified by
+    ``levenshtein``).  ``id_a < id_b``; ties in content still produce
+    one row per id pair.
 
-    Why a second algorithm: PassJoin's candidate key is a ~(len/(d+1))-
-    char SUBSTRING — on short strings over a small vocabulary (TPC-H
-    part names: ~9 chars drawn from ~92 words) those keys are so
-    low-entropy that the candidate equi-join degenerates toward N^2
-    (measured 147 s at sf0.1 vs 2 s for this operator).  Deletion
-    signatures keep len-d characters — near-full-string entropy — so
-    the join stays selective precisely where PassJoin degrades.  Each
-    edit (sub/ins/del) removes at most one aligned char from each side,
-    so lev(u,v) <= d implies u and v share a common <=d-deletion
-    variant: signature equality is a lossless candidate generator.
+    Each edit (sub/ins/del) removes at most one aligned character from
+    each side, so ``lev(u, v) <= d`` implies u and v share a common
+    <=d-deletion variant: signature equality is a lossless candidate
+    generator.
 
     Cost per row: <= 1 + n + n(n-1)/2 signature rows (n = string
-    length) — use for SHORT strings (n <~ 30); for long strings the
-    quadratic per-row factor loses to ``fuzzy_self_join``'s d+1
-    segments.  Supports d <= 2 (the practical dedup thresholds; the
-    variant generator is hand-unrolled per delete depth).
+    length) — meant for SHORT strings (n <~ 30).  Supports d <= 2 (the
+    practical dedup thresholds; the variant generator is hand-unrolled
+    per delete depth) and raises ``ValueError`` beyond that.
 
     Duplicate-string handling: the signature join runs over DISTINCT
     string VALUES, and id pairs are expanded afterwards by joining the
@@ -246,8 +93,7 @@ def fuzzy_self_join_deletes(
     if max_dist < 0:
         raise ValueError("max_dist must be >= 0")
     if max_dist > 2:
-        raise ValueError("fuzzy_self_join_deletes supports max_dist <= 2; "
-                         "use fuzzy_self_join (PassJoin) for larger radii")
+        raise ValueError("fuzzy_self_join supports max_dist <= 2")
     d = int(max_dist)
 
     base = df.select(

@@ -94,8 +94,10 @@ def lloyd_iterations(
     across iterations — an inverted-list directory name that survives
     retraining); a cluster that loses all members keeps its previous
     centroid (it can re-acquire members later).  This is the single
-    Lloyd implementation — ``kmeans_fit`` and ``ann.kmeans_refine``
-    both delegate here."""
+    Lloyd implementation: ``kmeans_fit`` delegates here, and a caller
+    refining IVF centroids from ``ann.select_centroids`` calls it
+    directly — the ids stay the seeds', so the result plugs into
+    ``ivf_assign``/``ivf_search`` unchanged."""
     cmat = np.array(cmat, dtype=np.float64, copy=True)
     for _ in range(iters):
         assigned = ivf_assign(corpus, cids, cmat, id_col=id_col, vec_col=vec_col)

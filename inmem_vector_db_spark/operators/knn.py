@@ -14,25 +14,17 @@ Spark-first design:
   scan exactly like the reference but parallel over partitions.  This is
   the plan that survives a 100 TB corpus.
 
-* **Multi query** (``knn_join``) — broadcast the (small) query side into a
-  nested-loop join, then per-query top-k.  Two implementations:
-
-  - ``knn_join``: one SQL distance expression over the two vector
-    columns + window ``row_number() <= k``.  JVM-only (its
-    ``zip_with``/``aggregate`` distance runs interpreted inside the
-    stage), oracle-exact, but the window shuffles
-    |corpus| x |queries| candidate rows by query_id — fine for modest
-    fan-outs, wrong at 100 TB.
-
-  - ``knn_join_vectorized``: ``mapInArrow`` computes a numpy
-    distance-matrix per Arrow batch (the (N, D) corpus matrix reshaped
-    straight from the ListArray's flat buffer — no per-row cell
-    materialization) and emits only the local top-k per
-    query per batch (<= k x |queries| rows per partition), then a final
-    tiny window merges.  The shuffle input shrinks from |corpus| x
-    |queries| to N_partitions x k x |queries| — this is the scale path,
-    and BLAS matrix math is also ~10-100x faster per row than per-row
-    expression eval.
+* **Multi query** (``knn_join_vectorized``) — the (small) query side
+  is collected and broadcast; ``mapInArrow`` computes a numpy distance
+  matrix per Arrow batch (the (N, D) corpus matrix reshaped straight
+  from the ListArray's flat buffer — no per-row cell materialization)
+  and emits only the local top-k per query per batch (<= k x |queries|
+  rows per partition), then a final tiny window merges.  The shuffle
+  carries N_partitions x k x |queries| rows, never |corpus| x
+  |queries| candidates, and BLAS matrix math is ~10-100x faster per row
+  than per-row expression eval.  One multi-query path: an expression
+  cross join + ``row_number`` window would shuffle every candidate pair
+  by query id and is wrong at 100 TB.
 
 Both paths compute float64 distances and agree with the DuckDB oracle.
 """
@@ -44,7 +36,7 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from inmem_vector_db_spark.functions.distance import METRICS, distance, distance_sql
+from inmem_vector_db_spark.functions.distance import METRICS, distance_sql
 from inmem_vector_db_spark.operators.arrowmat import flat_matrix
 
 
@@ -95,42 +87,6 @@ def knn(
     )
 
 
-def knn_join(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    metric: str = "euclidean",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """For every query row, the k nearest corpus rows (expression path).
-
-    Output: (query_id, id_col, dist, rank) with rank 1..k per query.
-    """
-    if k <= 0:
-        raise ValueError("k must be > 0")
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qvec")
-        )
-    )
-    dist = distance(metric, "__qvec", vec_col)
-    scored = corpus.crossJoin(q).select(
-        F.col("__qid").alias(query_id_col),
-        F.col(id_col),
-        dist.alias("dist"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc_nulls_last(), id_col
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def knn_join_vectorized(
     corpus: DataFrame,
     queries: DataFrame,
@@ -141,8 +97,12 @@ def knn_join_vectorized(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Scale/fast path: numpy distance matrix per Arrow batch, partial
-    top-k map-side, tiny final merge. Same output contract as knn_join."""
+    """For every query row, the k nearest corpus rows: numpy distance
+    matrix per Arrow batch, partial top-k map-side, tiny final merge.
+
+    Output: (query_id, id_col, dist, rank) with rank 1..k per query,
+    ordered by (dist, id) like ``knn``.
+    """
     import numpy as np
 
     if k <= 0:

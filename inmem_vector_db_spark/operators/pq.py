@@ -14,7 +14,7 @@ PQ): codebooks are stride-sampled corpus rows, and both encode and the
 ADC lookup accumulate squared differences in a FIXED sequential order
 over dimensions — bit-identical to the DuckDB oracle's left-fold
 ``list_sum``, so codes, candidate sets, and final rows all value-hash
-match.  A trained codebook (``ann.kmeans_refine`` style) would slot in
+match.  A trained codebook (``kmeans.lloyd_iterations`` style) would slot in
 without changing the search path.
 
 Scale shape:

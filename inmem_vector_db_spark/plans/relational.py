@@ -1524,25 +1524,23 @@ FROM scored WHERE abs(z) > 2.0
 
 
 # ---------------------------------------------------------------------------
-# fuzzy string self-join: PassJoin segment filter + exact verify.  The
-# oracle below is the NAIVE O(N^2) cross join — the value-hash match
-# proves the segment blocking is LOSSLESS, not just plausible.  The
+# fuzzy string self-join: deletion-neighbourhood signatures + exact
+# verify.  The oracle below is the NAIVE O(N^2) cross join — the
+# value-hash match proves the blocking is LOSSLESS, not just plausible.  The
 # entry aggregates pairs into a per-distance histogram with an
 # order-insensitive pair checksum so the row set stays small while
 # remaining pair-exact in practice.
 
 
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deletion-neighborhood (FastSS-family) variant: part names are
-    ~9 chars over a ~92-word vocabulary, so PassJoin's substring keys
-    are too low-entropy (measured 147 s at sf0.1, trending N^2);
-    near-full-string deletion signatures keep the candidate join
-    selective (~2 s).  Same brute-force DuckDB oracle — the hash match
-    still proves the blocking lossless."""
-    from inmem_vector_db_spark.operators.fuzzy import fuzzy_self_join_deletes
+    """Part-name pairs within levenshtein 2, as a per-distance
+    histogram.  Part names are ~9 chars over a ~92-word vocabulary,
+    where deletion signatures keep the candidate join selective (~2 s
+    at sf0.1; ``operators.fuzzy`` says why not PassJoin)."""
+    from inmem_vector_db_spark.operators.fuzzy import fuzzy_self_join
 
     part = load_table(spark, sf_dir, "part")
-    pairs = fuzzy_self_join_deletes(part, "p_partkey", "p_name", max_dist=2)
+    pairs = fuzzy_self_join(part, "p_partkey", "p_name", max_dist=2)
     return (
         pairs.select(
             F.col("dist").cast("long").alias("dist"),

@@ -1,3 +1,3 @@
-from inmem_vector_db_spark.sources.loader import TABLES, load_table, load_tables, register_views
+from inmem_vector_db_spark.sources.loader import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table"]

@@ -126,16 +126,6 @@ def load_chunk_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works on them."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def load_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """JSONL source — the lingua franca of LLM training corpora.  An
     EXPLICIT schema is required: schema inference reads the data twice

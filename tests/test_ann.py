@@ -10,9 +10,9 @@ from inmem_vector_db_spark.operators.ann import (
     ivf_assign,
     ivf_search,
     kmeans_inertia,
-    kmeans_refine,
     select_centroids,
 )
+from inmem_vector_db_spark.operators.kmeans import lloyd_iterations
 from inmem_vector_db_spark.operators.knn import knn
 
 
@@ -71,7 +71,7 @@ def test_ivf_search_is_exact_within_probed_lists(emb):
 def test_kmeans_refinement_decreases_inertia(emb):
     cids, cmat = select_centroids(emb, stride=100)
     before = kmeans_inertia(emb, cids, cmat)
-    cids2, cmat2 = kmeans_refine(emb, cids, cmat, iterations=3)
+    cids2, cmat2 = lloyd_iterations(emb, cids, cmat, iters=3)
     after = kmeans_inertia(emb, cids2, cmat2)
     assert after < before  # Lloyd never increases inertia; strict here
     # centroid count and ids preserved: drop-in for ivf_search
@@ -80,7 +80,7 @@ def test_kmeans_refinement_decreases_inertia(emb):
 
 def test_ivf_search_with_refined_centroids(emb):
     cids, cmat = select_centroids(emb, stride=100)
-    cids, cmat = kmeans_refine(emb, cids, cmat, iterations=2)
+    cids, cmat = lloyd_iterations(emb, cids, cmat, iters=2)
     q = [float(x) for x in emb.filter(F.col("vec_id") == 3).head()["embedding"]]
     res = ivf_search(emb, q, k=5, nprobe=2, centroids=(cids, cmat))
     rows = res.collect()
@@ -142,7 +142,7 @@ def test_trained_centroids_recall_floor(spark, sf_dir):
         return len(approx & exact) / len(exact)
 
     stride_c = select_centroids(emb, stride=50)
-    trained_c = kmeans_refine(emb, *stride_c, iterations=2)
+    trained_c = lloyd_iterations(emb, *stride_c, iters=2)
     r_stride = recall(stride_c)
     r_trained = recall(trained_c)
     emb.unpersist()

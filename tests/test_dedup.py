@@ -121,25 +121,6 @@ def test_fingerprint_dup_groups(spark):
     assert rows[0]["group_size"] == 2 and rows[0]["canonical_id"] == 1
 
 
-def test_embedding_near_dup_lsh_blocking_recall(spark, sf_dir):
-    """The LSH-blocked near-dup path must recover (almost) all exact
-    pairs at a fraction of the comparisons."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = {
-        (r["id_a"], r["id_b"], r["cos_dist"])
-        for r in D.embedding_near_dup_pairs(emb, max_cosine_dist=0.58).collect()
-    }
-    blocked = {
-        (r["id_a"], r["id_b"], r["cos_dist"])
-        for r in D.embedding_near_dup_pairs_lsh(
-            emb, max_cosine_dist=0.58, num_tables=16, hash_size=3
-        ).collect()
-    }
-    assert exact, "fixture should contain near-dup pairs at 0.58"
-    assert blocked <= exact  # subset: identical distances, no false pairs
-    assert len(blocked) / len(exact) >= 0.9  # high recall
-
-
 def test_knn_vectorized_dim_mismatch_raises(spark, sf_dir):
     import pytest as _pytest
 

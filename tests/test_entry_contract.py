@@ -296,3 +296,58 @@ def test_artifact_owning_entries_are_bench_excluded():
     assert not missing, f"artifact owners not bench-excluded: {missing}"
     unknown = sorted(entrymod._BUILD_ENTRIES - set(entrymod.queries()))
     assert not unknown, f"_BUILD_ENTRIES names not in queries(): {unknown}"
+
+
+# modules kept without an entry, benchmark or warmup importing them,
+# each with the reason it stays
+_UNREACHED_KEPT = {
+    # credential-gated embedding providers: no run can reach them
+    # offline, and tests/test_providers.py proves their batching, dedup
+    # and caching through a fake transport
+    "inmem_vector_db_spark.sources.providers",
+}
+
+
+def _imported_modules(path) -> set[str]:
+    """Every dotted name ``path`` imports, function-local imports
+    included; ``from m import x`` yields ``m`` and ``m.x`` (``x`` may be
+    a submodule).  The package uses absolute imports only."""
+    import ast
+
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            out.add(node.module)
+            out.update(f"{node.module}.{a.name}" for a in node.names)
+    return out
+
+
+def test_every_package_module_is_reached_from_an_entry():
+    """No module that no entry, benchmark or bench warmup reaches:
+    walk the imports transitively from ``__spark_entry__.py``,
+    ``bench.py`` and ``perfbench/*.py``; importing a module imports
+    its parent packages too."""
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    files = {}
+    for p in (root / "inmem_vector_db_spark").rglob("*.py"):
+        parts = p.relative_to(root).with_suffix("").parts
+        name = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        files[name] = p
+    seen: set[str] = set()
+    todo = [root / "__spark_entry__.py", root / "bench.py",
+            *(root / "perfbench").glob("*.py")]
+    while todo:
+        for name in _imported_modules(todo.pop()):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                mod = ".".join(parts[:i])
+                if mod in files and mod not in seen:
+                    seen.add(mod)
+                    todo.append(files[mod])
+    unreached = sorted(set(files) - seen - _UNREACHED_KEPT)
+    assert not unreached, f"modules no entry or benchmark reaches: {unreached}"
+    assert _UNREACHED_KEPT <= set(files) - seen, "a kept module is now reached"

@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from inmem_vector_db_spark.operators.knn import knn, knn_join, knn_join_vectorized
+from inmem_vector_db_spark.operators.knn import knn, knn_join_vectorized
 from inmem_vector_db_spark.sources.loader import load_table
 from tests.test_distance import np_metric
 
@@ -61,7 +61,7 @@ def test_knn_k_bounds(emb):
         knn(emb, [0.0] * 64, k=0)
 
 
-@pytest.mark.parametrize("impl", [knn_join, knn_join_vectorized])
+@pytest.mark.parametrize("impl", [knn_join_vectorized])
 def test_knn_join_matches_brute(spark, emb, emb_np, impl):
     ids, mat = emb_np
     qids = [0, 1, 2, 3]
@@ -124,11 +124,10 @@ def test_knn_join_vectorized_tie_break_duplicate_vectors(spark):
         r["vec_id"]
         for r in knn_join_vectorized(corpus, queries, k=3, metric="euclidean").collect()
     )
-    expr = sorted(
-        r["vec_id"]
-        for r in knn_join(corpus, queries, k=3, metric="euclidean").collect()
+    single = sorted(
+        r["vec_id"] for r in knn(corpus, dup, k=3, metric="euclidean").collect()
     )
-    assert got == expr == [0, 10, 20]
+    assert got == single == [0, 10, 20]
 
 
 def test_knn_null_embedding_raises(spark):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from inmem_vector_db_spark.operators.knn import knn, knn_join
+from inmem_vector_db_spark.operators.knn import knn
 from inmem_vector_db_spark.operators.skew import salted_agg, top_values_per_key
 
 
@@ -39,14 +39,6 @@ def test_filter_pushdown_reaches_scan(emb):
     plan = _plan(emb.filter(F.col("label") == 3).select("vec_id"))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and any("label" in ln for ln in pushed)
-
-
-def test_knn_join_broadcasts_query_side(emb):
-    queries = emb.limit(2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    plan = _plan(knn_join(emb, queries, k=3))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
 def test_tpch_q5_broadcasts_dims(spark, sf_dir):
