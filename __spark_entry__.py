@@ -989,7 +989,7 @@ def _store_search_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     library, ingest every document row as a chunk (tags = [lang]),
     batch-embed via the deterministic md5 provider, then run the full
     search path — embed query text, euclidean kNN, pre-filter tags,
-    document-enrichment join, projection.  The md5 embedding scheme is
+    document-title lookup, projection.  The md5 embedding scheme is
     scalar-reproducible in DuckDB (md5_number_upper), so the WHOLE
     pipeline sits under the value-hash oracle."""
     from inmem_vector_db_spark.store import LibraryStore

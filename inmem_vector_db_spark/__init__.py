@@ -10,7 +10,7 @@ Reference semantics reproduced (see SURVEY.md for the full inventory):
   (``app/core/indexers/lsh.py``)
 * Library -> Document -> Chunk CRUD as batch jobs over parquet tables
   (``app/api/services/*``)
-* tag filtering / projection toggles / enrichment join of the search
+* tag filtering / projection toggles / document-title enrichment of the search
   endpoint (``app/api/services/library_service.py:193-258``)
 
 Beyond-reference, large-scale training-data-pipeline operators: dedup

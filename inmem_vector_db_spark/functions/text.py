@@ -259,14 +259,6 @@ def simhash60(text: Column | str, shingle_n: int = 2) -> Column:
     return _majority_vote_udf(60)(hs)
 
 
-def hamming64(a: Column | str, b: Column | str) -> Column:
-    """Hamming distance between two 64-bit signatures (BIGINT columns) —
-    popcount of XOR, JVM-side via bit_count."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.bit_count(ca.bitwiseXOR(cb))
-
-
 # ---------------------------------------------------------------------------
 # deterministic sampling + PII redaction (training-data pipeline ops)
 

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from inmem_vector_db_spark.functions.distance import distance
 from inmem_vector_db_spark.functions.text import (
-    fingerprint,
     minhash_signature,
     simhash64,
     word_shingles,
@@ -55,23 +54,6 @@ def exact_dup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
             F.col(f"a.{id_col}").alias("canonical_id"),
             F.col(f"b.{id_col}").alias("dup_id"),
         )
-    )
-
-
-def fingerprint_dup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Groups sharing a key-collision fingerprint (sorted distinct token
-    set) but not necessarily identical text — catches shuffled/repeated
-    boilerplate."""
-    return (
-        df.select(fingerprint(text_col).alias("fp"), F.col(id_col))
-        .groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("group_size"),
-            F.min(id_col).alias("canonical_id"),
-        )
-        .filter(F.col("group_size") > 1)
     )
 
 

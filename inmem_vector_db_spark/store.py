@@ -11,9 +11,9 @@ per-indexer locks, pickled per-library on every mutation
   reference: one ``{id: row}`` dict each is the table of record, every
   mutation is a dict operation that runs no Spark job, and the table
   reads as a DataFrame (one LocalRelation, built on the first read after
-  a mutation).  They must fit in driver memory anyway: ``search``
-  broadcasts the documents table, and ``add_chunks`` checks its batch's
-  document ids against the dict;
+  a mutation).  They must fit in driver memory anyway: ``search`` looks
+  its k results' document titles up in the dict, and ``add_chunks``
+  checks its batch's document ids against it;
 * chunks are kept the same way, with distributed rows: the table of
   record is one ``localCheckpoint``ed segment per ``add_chunks`` batch,
   a driver-side ``{chunk_id: row}`` map of updated rows and one keep
@@ -32,8 +32,8 @@ per-indexer locks, pickled per-library on every mutation
 
 Validation (reference P6, ``chunk.py:25-71`` etc.) happens at ingest:
 non-empty name/title/text, deduped non-empty tags, ``page >= 0``,
-non-empty 1-D embedding without NaN — failing the batch loudly rather
-than silently dropping rows.
+non-empty 1-D embedding of finite values — failing the batch loudly
+rather than silently dropping rows.
 
 Known reference bugs NOT reproduced (SURVEY.md 7.4): the batch-add
 cross-document chunk-list pollution (``library.py:107``) and the
@@ -365,12 +365,13 @@ class LibraryStore:
                 F.when(F.coalesce(F.trim("text"), F.lit("")) == "", 1).otherwise(0)
             ).alias("bad_text"),
             F.sum(F.when(F.col("page") < 0, 1).otherwise(0)).alias("bad_page"),
-            # no NaN either: an updated row is kept in a LocalRelation,
-            # which cannot hold NaN (literal_df)
+            # finite values only: an updated row, and a search result,
+            # is kept in a LocalRelation, which cannot hold NaN
+            # (literal_df), and an inf makes the distances NaN or inf
             F.sum(F.when(
                 (F.size(F.coalesce("embedding", F.array())) == 0)
-                | F.exists("embedding", lambda x: F.isnan(x)), 1).otherwise(0)
-            ).alias("bad_emb"),
+                | F.exists("embedding", lambda x: F.isnan(x) | (F.abs(x) == float("inf"))), 1
+            ).otherwise(0)).alias("bad_emb"),
         ]
         stats = new.agg(*agg).head().asDict()
         docs = self._rows["documents"]
@@ -383,7 +384,7 @@ class LibraryStore:
         if stats.get("bad_page"):
             raise ValidationError("page must be >= 0")  # chunk.py:36-42
         if stats.get("bad_emb"):
-            raise ValidationError("embedding must be non-empty, without NaN")  # chunk.py:63-71
+            raise ValidationError("embedding must be non-empty and finite")  # chunk.py:63-71
         self._segments.append(new)
         self._chunks_changed()
         return new
@@ -520,8 +521,11 @@ class LibraryStore:
         ``parity=False`` (default) = correct semantics: pre-filter tags,
         rank by the requested metric.
 
-        Returns (chunk_id, document_id, score, rank, doc_title
-        [, text/tags..][, embedding]).
+        Eager, like the reference's one-request search (§3.1): the top-k
+        runs as one Spark job at call time, and the returned DataFrame
+        holds the k rows (a LocalRelation), so a later mutation of the
+        store does not change it.  Returns (chunk_id, document_id,
+        score, rank, doc_title[, text/tags..][, embedding]).
         """
         if k <= 0:
             raise ValidationError("k must be > 0")  # schemas/search.py:38-43
@@ -531,30 +535,30 @@ class LibraryStore:
         qvec = self._embed(query_text)
 
         base = self.chunks.filter(F.col("library_id") == library_id)
-        rank_metric = "euclidean" if parity else metric
         if filter_tags and not parity:
             base = base.filter(tags_superset(F.col("tags"), filter_tags))
-        scored = base.withColumn("__rank_d", distance(rank_metric, qvec, "embedding"))
-        # orderBy+limit => TakeOrderedAndProject (partition-local top-k,
-        # driver merge — no corpus shuffle); the window then ranks only
-        # the k survivors, not the corpus.
+        # distances are columns, computed once per row: a sort expression
+        # would be evaluated again on every comparison of the top-k
+        scored = base.withColumn("score", distance(metric, qvec, "embedding"))
+        if parity:
+            scored = scored.withColumn("__rank_d", distance("euclidean", qvec, "embedding"))
+        meta = ["text", "source", "created_at", "tags", "page"] if include_metadata else []
+        meta += ["embedding"] if include_embeddings else []
+        # the parity post-filter reads tags, returned or not
+        need = ["tags"] if parity and filter_tags and not include_metadata else []
+        # orderBy+limit at the root => TakeOrderedAndProject: a
+        # partition-local top-k and one merge on the driver, in one job.
         # ``tie_col`` breaks distance ties deterministically; chunk_id
         # (uuid) by default, a stable payload column for oracle checks.
-        topk = scored.orderBy("__rank_d", tie_col).limit(k)
-        w = Window.orderBy("__rank_d", tie_col)
-        topk = topk.withColumn("rank", F.row_number().over(w))
-        if filter_tags and parity:
-            # reference order: slice to k first, then filter (P2) — no backfill
-            topk = topk.filter(tags_superset(F.col("tags"), filter_tags))
-        out = topk.withColumn("score", distance(metric, qvec, "embedding"))
-
-        # enrichment join (J5): chunk -> parent document title
-        docs = self.documents.select("document_id", F.col("title").alias("doc_title"))
-        out = out.join(F.broadcast(docs), "document_id", "left")
-
-        cols = ["chunk_id", "document_id", "score", "rank", "doc_title"]
-        if include_metadata:  # P1 projection toggles
-            cols += ["text", "source", "created_at", "tags", "page"]
-        if include_embeddings:
-            cols += ["embedding"]
-        return out.select(*cols).orderBy("rank")
+        top = scored.orderBy("__rank_d" if parity else "score", tie_col).limit(k)
+        top = top.select("chunk_id", "document_id", "score", *meta, *need)
+        # rank, the parity post-filter (reference order: slice to k
+        # first, then filter, P2 — no backfill) and the document title
+        # (J5) on the driver
+        rows = [(*r[:3], rank, self._rows["documents"].get(r["document_id"], {}).get("title"),
+                 *(r[c] for c in meta))
+                for rank, r in enumerate(top.collect(), 1)
+                if not (parity and filter_tags) or set(filter_tags) <= set(r["tags"] or ())]
+        types = dict(top.dtypes, rank="int", doc_title="string")
+        cols = ["chunk_id", "document_id", "score", "rank", "doc_title", *meta]
+        return literal_df(self.spark, rows, ", ".join(f"{c} {types[c]}" for c in cols))

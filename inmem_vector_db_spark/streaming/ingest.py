@@ -175,7 +175,7 @@ def enrich_stream_with_dimension(
     static (or slowly-refreshed) dimension table.  Spark re-plans the
     static side per micro-batch, so a dimension REFRESH (overwrite the
     parquet) is picked up without restarting the stream — the streaming
-    analog of the store's document-enrichment join (J5)."""
+    analog of the store's document-title enrichment (J5)."""
     return events.join(F.broadcast(dim), key, "left")
 
 

@@ -111,16 +111,6 @@ def test_embedding_near_dup_pairs(spark):
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
 
 
-def test_fingerprint_dup_groups(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "c b a"), (3, "a b d")],
-        "doc_id long, text string",
-    )
-    rows = D.fingerprint_dup_groups(df).collect()
-    assert len(rows) == 1
-    assert rows[0]["group_size"] == 2 and rows[0]["canonical_id"] == 1
-
-
 def test_knn_vectorized_dim_mismatch_raises(spark, sf_dir):
     import pytest as _pytest
 

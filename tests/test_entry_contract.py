@@ -351,3 +351,21 @@ def test_every_package_module_is_reached_from_an_entry():
     unreached = sorted(set(files) - seen - _UNREACHED_KEPT)
     assert not unreached, f"modules no entry or benchmark reaches: {unreached}"
     assert _UNREACHED_KEPT <= set(files) - seen, "a kept module is now reached"
+
+
+def test_no_assert_statement_in_runtime_code():
+    """The package, the entry module and the bench keep no ``assert``:
+    ``python -O`` strips them, so a check written as one would vanish
+    from an optimized run instead of raising."""
+    import ast
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    found = [
+        f"{p.relative_to(root)}:{node.lineno}"
+        for p in [*(root / "inmem_vector_db_spark").rglob("*.py"),
+                  root / "__spark_entry__.py", root / "bench.py"]
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not found, f"assert statements python -O would strip: {found}"

@@ -126,20 +126,22 @@ def test_validation_errors(spark, store):
 
 
 def test_nan_embedding_rejected_at_ingest(spark, store):
-    """A NaN in a given embedding fails its batch: an updated chunk's
-    row is kept in a LocalRelation, which cannot hold NaN."""
+    """A NaN or an infinity in a given embedding fails its batch: an
+    updated chunk's row and a search result are kept in a LocalRelation,
+    which cannot hold NaN, and an infinity makes distances NaN or inf."""
     lid = store.create_library("nan")
     doc = store.add_documents(
         lid, spark.createDataFrame([("d",)], "title string")
     ).head()
-    with pytest.raises(ValidationError):
-        store.add_chunks(
-            lid,
-            spark.createDataFrame(
-                [(doc["document_id"], "t", [1.0, float("nan")])],
-                "document_id string, text string, embedding array<float>",
-            ),
-        )
+    for bad in ([1.0, float("nan")], [float("inf"), 1.0, 0.0, 0.0], [0.0, float("-inf")]):
+        with pytest.raises(ValidationError, match="finite"):
+            store.add_chunks(
+                lid,
+                spark.createDataFrame(
+                    [(doc["document_id"], "t", bad)],
+                    "document_id string, text string, embedding array<float>",
+                ),
+            )
     assert store.chunks.isEmpty()
 
 
@@ -207,10 +209,40 @@ def test_parity_rank_euclidean_score_metric(populated):
 
 def test_include_flags_projection(populated):
     store, lid, _ = populated
+    head = [("chunk_id", "string"), ("document_id", "string"), ("score", "double"),
+            ("rank", "int"), ("doc_title", "string")]
+    meta = [("text", "string"), ("source", "string"), ("created_at", "timestamp"),
+            ("tags", "array<string>"), ("page", "int")]
     slim = store.search(lid, "q", k=1, include_metadata=False)
-    assert "text" not in slim.columns and "embedding" not in slim.columns
+    assert slim.dtypes == head
+    assert store.search(lid, "q", k=1).dtypes == head + meta
     full = store.search(lid, "q", k=1, include_metadata=True, include_embeddings=True)
-    assert "text" in full.columns and "embedding" in full.columns
+    assert full.dtypes == head + meta + [("embedding", "array<float>")]
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"filter_tags": ["ocean"]},
+     {"parity": True, "metric": "dot_product", "filter_tags": ["ocean"]}],
+    ids=["plain", "tag", "parity-tag"],
+)
+def test_search_runs_one_job(spark, populated, kw, request):
+    """A search and the ``collect()`` of its result run one job of one
+    stage: the top-k is a root TakeOrderedAndProject (a partition-local
+    top-k merged on the driver, no shuffle), and the rank, the parity
+    post-filter and the document titles are driver-side."""
+    store, lid, _ = populated
+    sc = spark.sparkContext
+    group = request.node.name  # one group per case: a group keeps its jobs
+    sc.setJobGroup(group, "search + collect")
+    try:
+        rows = store.search(lid, "coral bleaching from warming", k=3, **kw).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
 
 
 def test_update_chunk_reembeds_and_moves(spark, populated):
@@ -312,9 +344,10 @@ def test_partitioned_snapshot_chunks_take_updates(spark, populated, tmp_path):
 
 def test_interleaved_chunk_mutations_keep_search_plan_bounded(spark, store):
     """A long-lived store stays O(1) per mutation: rounds of a small add,
-    a text update and a two-id delete leave the optimized ``search``
-    plan under a fixed node count (one line per node), however many
-    rounds ran, and the live row count exact."""
+    a text update and a two-id delete leave the optimized plan of what
+    ``search`` scans (the library's chunks) under a fixed node count
+    (one line per node), however many rounds ran, and the live row
+    count and each search's row count exact."""
     from inmem_vector_db_spark.functions.localframe import literal_df
     from inmem_vector_db_spark.store import _FOLD_AFTER
 
@@ -331,9 +364,11 @@ def test_interleaved_chunk_mutations_keep_search_plan_bounded(spark, store):
         store.update_chunk(ids[0], text=f"updated {i}")
         store.delete_chunks(ids[1:3])
         live += 2
-        plan = store.search(lid, "text 0-0", k=5)._jdf.queryExecution().optimizedPlan()
+        scanned = store.chunks.filter(F.col("library_id") == lid)
+        plan = scanned._jdf.queryExecution().optimizedPlan()
         assert len(plan.toString().splitlines()) <= 30, (i, plan.toString())
         assert store.chunks.count() == live
+        assert len(store.search(lid, "text 0-0", k=5).collect()) == min(5, live)
 
 
 def test_delete_cascades(populated):

@@ -89,11 +89,6 @@ def test_simhash_matches_python_reference(spark, sf_dir):
         assert got[r["doc_id"]] == want
 
 
-def test_hamming64(spark):
-    df = spark.createDataFrame([(0b1011, 0b0010)], "a long, b long")
-    assert df.select(T.hamming64("a", "b").alias("h")).head()["h"] == 2
-
-
 def test_chunk_documents_windows(spark):
     from inmem_vector_db_spark.operators.chunking import chunk_documents
 
