@@ -19,12 +19,15 @@ DuckDB-oracle-expressible.  A k-means refinement
 
 from __future__ import annotations
 
+import re
+from collections import Counter
 from collections.abc import Iterator, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inmem_vector_db_spark.functions.distance import sq_euclidean_matrix
 from inmem_vector_db_spark.operators.arrowmat import flat_matrix
 from inmem_vector_db_spark.operators.knn import knn
 
@@ -145,11 +148,7 @@ def ivf_assign(
                 continue
             names = rb.schema.names
             mat = flat_matrix(rb, vec_col, expected_dim=cmat_.shape[1])
-            d2 = (
-                (mat * mat).sum(1)[:, None]
-                + (cmat_ * cmat_).sum(1)[None, :]
-                - 2.0 * mat @ cmat_.T
-            )
+            d2 = sq_euclidean_matrix(mat, cmat_)
             cluster = pa.array(cid_arr[np.argmin(d2, axis=1)], type=cid_t)
             cols = [
                 rb.column(names.index(c)) for c in (id_col, vec_col, *keep)
@@ -338,31 +337,17 @@ def compact_ivf_index(
     compacted.  Content is bit-identical before/after (pinned in
     test_ann.py) — this is a pure layout job, the vector analog of
     ``sources.maintenance.compact``."""
-    vec_root = f"{path}/vectors"
-    # Hadoop FS listing (not a local glob): works on HDFS/S3/local alike
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(vec_root)
-    fs = root.getFileSystem(conf)
-    cids = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("cluster_id=")):
-            continue
-        n_files = sum(
-            1
-            for f in fs.listStatus(st.getPath())
-            if f.getPath().getName().endswith(".parquet")
-        )
-        if n_files >= min_files:
-            cids.append(int(name.split("=", 1)[1]))
+    vecs = spark.read.parquet(f"{path}/vectors")
+    # one listing: the files the read already lists, counted per list
+    n_files = Counter(
+        int(m.group(1))
+        for f in vecs.inputFiles()
+        if (m := re.search(r"/cluster_id=(-?\d+)/", f))
+    )
+    cids = sorted(c for c, n in n_files.items() if n >= min_files)
     if not cids:
         return 0
-    rows = (
-        spark.read.parquet(vec_root)
-        .filter(F.col("cluster_id").isin(cids))
-        .repartition(len(cids), "cluster_id")
-    )
+    rows = vecs.filter(F.col("cluster_id").isin(cids)).repartition(len(cids), "cluster_id")
     _write_lists(rows, path, "overwrite", dynamic=True)
     return len(cids)
 

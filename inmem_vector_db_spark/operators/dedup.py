@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from inmem_vector_db_spark.functions.distance import distance
+from inmem_vector_db_spark.functions.distance import distance, distance_matrix
 from inmem_vector_db_spark.functions.text import (
     minhash_signature,
     simhash64,
@@ -679,13 +679,9 @@ def embedding_near_dup_pairs(
         bi, bj = int(key[0]), int(key[1])
         ids = pdf[id_col].to_numpy()
         mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        norms = np.linalg.norm(mat, axis=1)
 
         def pairs(ai, bi_):
-            denom = norms[ai][:, None] * norms[bi_][None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = (mat[ai] @ mat[bi_].T) / denom
-            dist = np.round(np.where(denom == 0.0, 1.0, 1.0 - sim), 6)
+            dist = np.round(distance_matrix("cosine", mat[ai], mat[bi_]), 6)
             keep = dist <= thresh
             if bi == bj:
                 # same block on both sides: strict upper triangle by id

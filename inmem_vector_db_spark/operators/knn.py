@@ -15,11 +15,13 @@ Spark-first design:
   the plan that survives a 100 TB corpus.
 
 * **Multi query** (``knn_join_vectorized``) — the (small) query side
-  is collected and broadcast; ``mapInArrow`` computes a numpy distance
-  matrix per Arrow batch (the (N, D) corpus matrix reshaped straight
-  from the ListArray's flat buffer — no per-row cell materialization)
-  and emits only the local top-k per query per batch (<= k x |queries|
-  rows per partition), then a final tiny window merges.  The shuffle
+  is collected and broadcast; ``batched_topk``, one ``mapInArrow``
+  stage, computes ``distance_matrix`` per Arrow batch (the (N, D) corpus
+  matrix reshaped straight from the ListArray's flat buffer — no
+  per-row cell materialization) and emits only the local top-k per
+  query per batch (<= k x |queries| rows per partition), then a final
+  tiny window merges.  ``quantize.knn_int8`` runs the same stage with a
+  reader that dequantizes int8 codes.  The shuffle
   carries N_partitions x k x |queries| rows, never |corpus| x
   |queries| candidates, and BLAS matrix math is ~10-100x faster per row
   than per-row expression eval.  One multi-query path: an expression
@@ -31,12 +33,13 @@ Both paths compute float64 distances and agree with the DuckDB oracle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
-from inmem_vector_db_spark.functions.distance import METRICS, distance_sql
+from inmem_vector_db_spark.functions.distance import METRICS, distance_matrix, distance_sql
 from inmem_vector_db_spark.operators.arrowmat import flat_matrix
 
 
@@ -110,61 +113,64 @@ def knn_join_vectorized(
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}")
 
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-
     rows = queries.select(query_id_col, query_vec_col).collect()
     if not rows:
         raise ValueError("queries is empty")
-    qids = [r[0] for r in rows]
     qmat = np.asarray([list(r[1]) for r in rows], dtype=np.float64)  # (Q, D)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qmat))
+    dim = qmat.shape[1]
+    return batched_topk(
+        corpus.select(id_col, vec_col),
+        [r[0] for r in rows],
+        queries.schema[query_id_col].dataType,
+        qmat,
+        k,
+        metric,
+        id_col,
+        # NULL/ragged corpora raise the _dim_guard failure contract
+        lambda rb: flat_matrix(rb, vec_col, expected_dim=dim),
+        query_id_col,
+    )
 
+
+def batched_topk(
+    corpus: DataFrame,
+    qids: list,
+    qid_type: DataType,
+    qmat,
+    k: int,
+    metric: str,
+    id_col: str,
+    matrix: Callable,
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """The k nearest ``corpus`` rows to each query row of ``qmat`` (ids
+    ``qids`` of Spark type ``qid_type``), as (query_id_col, id_col, dist,
+    rank).  ``matrix(record_batch)`` reads a batch's (N, D) float64
+    corpus matrix, e.g. from the ListArray's flat buffer: one slice +
+    reshape instead of N per-row ndarray cells.  Each Arrow batch emits
+    its local top-k per query; one ``row_number`` window merges."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
+    id_type = corpus.schema[id_col].dataType
     out_schema = (
-        f"{query_id_col} {queries.schema[query_id_col].dataType.simpleString()}, "
-        f"{id_col} {corpus.schema[id_col].dataType.simpleString()}, "
-        "dist double"
+        f"{query_id_col} {qid_type.simpleString()}, "
+        f"{id_col} {id_type.simpleString()}, dist double"
     )
     # Arrow output types must match the declared schema exactly (ids can
-    # be any type — long doc ids, string keys — across the 18 call sites)
-    qid_t = to_arrow_type(queries.schema[query_id_col].dataType)
-    id_t = to_arrow_type(corpus.schema[id_col].dataType)
-    met = metric
-    kk = k
+    # be any type — long doc ids, string keys — across the call sites)
+    qid_t, id_t = to_arrow_type(qid_type), to_arrow_type(id_type)
 
     def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         qids_, qmat_ = bc.value
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            names = rb.schema.names
-            # (N, D) matrix from the ListArray's FLAT buffer: one slice +
-            # reshape instead of materializing N per-row ndarray cells
-            # (the per-row stack was the knn_quantized decade bottleneck).
-            # NULL/ragged corpora raise the _dim_guard failure contract.
-            vmat = flat_matrix(rb, vec_col, expected_dim=qmat_.shape[1])
-            if met == "euclidean":
-                # |q-v|^2 = |q|^2 + |v|^2 - 2 q.v   (BLAS-backed)
-                d2 = (
-                    (qmat_ * qmat_).sum(1)[:, None]
-                    + (vmat * vmat).sum(1)[None, :]
-                    - 2.0 * qmat_ @ vmat.T
-                )
-                dmat = np.sqrt(np.maximum(d2, 0.0))
-            elif met == "manhattan":
-                dmat = np.abs(qmat_[:, None, :] - vmat[None, :, :]).sum(-1)
-            elif met == "dot_product":
-                dmat = -(qmat_ @ vmat.T)
-            else:  # cosine
-                qn = np.linalg.norm(qmat_, axis=1)
-                vn = np.linalg.norm(vmat, axis=1)
-                denom = qn[:, None] * vn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = (qmat_ @ vmat.T) / denom
-                dmat = np.where(denom == 0.0, 1.0, 1.0 - sim)
-            take = min(kk, dmat.shape[1])
-            ids = np.asarray(rb.column(names.index(id_col)))
+            dmat = distance_matrix(metric, qmat_, matrix(rb))
+            take = min(k, dmat.shape[1])
+            ids = np.asarray(rb.column(rb.schema.names.index(id_col)))
             for qi, qid in enumerate(qids_):
                 # lexicographic (dist, id) selection so tied distances at
                 # the per-batch cut keep the LOWEST ids — map-side pruning
@@ -181,7 +187,7 @@ def knn_join_vectorized(
                     names=[query_id_col, id_col, "dist"],
                 )
 
-    partial = corpus.select(id_col, vec_col).mapInArrow(part, schema=out_schema)
+    partial = corpus.mapInArrow(part, schema=out_schema)
     w = Window.partitionBy(query_id_col).orderBy("dist", id_col)
     return (
         partial.withColumn("rank", F.row_number().over(w))

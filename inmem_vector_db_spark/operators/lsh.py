@@ -372,19 +372,25 @@ def delete_from_lsh_index(
     ).write.mode("append").parquet(f"{path}/tombstones")
 
 
+def _tombstones(spark, path: str):
+    """The tombstone table's directory as a Hadoop (FileSystem, Path):
+    PySpark has no public API to test a path for existence or delete it.
+    Testing first, not catching a failed read, keeps a delete-free read
+    from logging a ``FileNotFoundException`` stack trace, and lets a
+    transient IO error on a real tombstones read surface."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(f"{path}/tombstones")
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
 def read_lsh_index(spark, path: str, id_col: str = "vec_id") -> DataFrame:
     """The serveable index: written signatures minus tombstoned ids.
     The anti-join broadcasts the (small) tombstone table, so reads cost
     one pruned scan regardless of delete history."""
-    from pyspark.errors import AnalysisException
-
     idx = spark.read.parquet(f"{path}/signatures")
-    try:
-        tomb = spark.read.parquet(f"{path}/tombstones")
-    except AnalysisException:  # path-not-found: no deletes yet.  Only
-        # this narrow class — a transient IO error must surface, not
-        # silently serve tombstoned rows back.
+    fs, p = _tombstones(spark, path)
+    if not fs.exists(p):  # no deletes yet
         return idx
+    tomb = spark.read.parquet(f"{path}/tombstones")
     return idx.join(F.broadcast(tomb.select(id_col).distinct()), id_col, "left_anti")
 
 
@@ -394,23 +400,15 @@ def compact_lsh_index(spark, path: str, id_col: str = "vec_id") -> int:
     artifact without tombstoned rows, then drop the tombstone table.
     Returns the number of ids folded in.  Content afterwards is
     identical to ``read_lsh_index`` before (pinned in tests)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        tomb = spark.read.parquet(f"{path}/tombstones")
-    except AnalysisException:  # nothing to fold (same narrow class as
-        # read_lsh_index)
+    fs, p = _tombstones(spark, path)
+    if not fs.exists(p):  # nothing to fold
         return 0
-    n = tomb.select(id_col).distinct().count()
+    n = spark.read.parquet(f"{path}/tombstones").select(id_col).distinct().count()
     if n:
         survivors = read_lsh_index(spark, path, id_col).localCheckpoint()
         survivors.write.partitionBy("table_idx").mode("overwrite").parquet(
             f"{path}/signatures"
         )
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/tombstones")
-    fs = p.getFileSystem(conf)
     fs.delete(p, True)
     return n
 

@@ -32,22 +32,24 @@ Pipeline shape at scale:
   1. ingest writes (embedding float32[], emb_q int8[], emb_scale float);
   2. candidate search scans ONLY (id, emb_q, emb_scale) — 4x less IO —
      and dequantizes + partial-top-ks inside one Arrow pass
-     (``knn_int8``), no interpreted expressions in the hot loop;
+     (``knn_int8``: the batched top-k stage of ``operators.knn`` with a
+     dequantizing reader), no interpreted expressions in the hot loop;
   3. top-(k*oversample) candidates re-rank exactly on the float column
      via an IN-pruned scan (parquet row-group skipping on id).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from inmem_vector_db_spark.functions.distance import METRICS
 from inmem_vector_db_spark.operators.arrowmat import flat_matrix
-from inmem_vector_db_spark.operators.knn import knn, knn_join_vectorized
+from inmem_vector_db_spark.operators.knn import batched_topk, knn, knn_join_vectorized
 
 
 def _round_half_away(r):
@@ -165,27 +167,24 @@ def knn_int8(
     scale_col: str = "emb_scale",
 ) -> DataFrame:
     """Partial top-k over the int8 column for one or many queries in a
-    SINGLE Arrow pass: each batch dequantizes (codes * scale) and ranks
-    in numpy, emitting <= k rows per query per partition; a tiny final
-    window merges.  ``queries`` is [(query_id, vector), ...].
+    SINGLE Arrow pass: ``knn.batched_topk``, the stage behind
+    ``knn_join_vectorized``, with a reader that dequantizes each batch
+    (codes * scale) in numpy.  ``queries`` is [(query_id, vector), ...].
 
     This is the stage-1 scan of the two-stage search: it reads only
     (id, codes, scale) — 4x less IO than float32 at scale — and keeps
     the whole distance computation in BLAS, with zero interpreted
     higher-order functions.  Output: (query_id long, id_col, dist).
 
-    Ingestion is ``mapInArrow``, not ``mapInPandas``: the (N, D) codes
-    matrix comes from the Arrow ListArray's FLAT int8 buffer in one
-    reshape, instead of Arrow->pandas materializing N per-row ndarray
+    The (N, D) codes matrix comes from the Arrow ListArray's FLAT int8
+    buffer in one reshape (the int8 -> float64 conversion is the only
+    copy), instead of Arrow->pandas materializing N per-row ndarray
     cells that ``np.stack`` then re-copies.  Profiled at the synthetic
     sf1 decade (round 9): per-row stacking dominated the scan — 0.56 s
     of a 1.06 s scan for 20k rows — and was the suite's worst scaling
-    exponent (alpha +0.41).  The float64 math below is expression-for-
-    expression the old pandas path (flat.astype(float64) == per-cell
-    asarray(dtype=float64)), so candidate sets are bit-identical.
+    exponent (alpha +0.41).
     """
     import numpy as np
-    import pyarrow as pa
 
     if k <= 0:
         raise ValueError("k must be > 0")
@@ -193,77 +192,23 @@ def knn_int8(
         raise ValueError(f"unknown metric {metric!r}")
     if not queries:
         raise ValueError("queries is empty")
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    qids = [int(qid) for qid, _ in queries]
     qmat = np.asarray([list(v) for _, v in queries], dtype=np.float64)
-    spark = corpus_q.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qmat))
-    idt = corpus_q.schema[id_col].dataType.simpleString()
-    # explicit Arrow output types, same as knn.knn_join_vectorized: a
-    # numpy-inferred RecordBatch would mismatch the declared schema for
-    # id types numpy round-trips differently (int32-typed ids, dates,
-    # decimals) and fail at runtime (advisor r9)
-    id_t = to_arrow_type(corpus_q.schema[id_col].dataType)
-    out_schema = f"query_id long, {id_col} {idt}, dist double"
-    met, kk = metric, k
+    dim = qmat.shape[1]
 
-    def part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        qids_, qmat_ = bc.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            # ListArray layout: offsets index the shared flat values
-            # buffer — the (N, D) matrix is one slice + reshape (the
-            # int8 -> float64 conversion is the only copy)
-            codes = flat_matrix(rb, q_col, expected_dim=qmat_.shape[1])
-            scales = np.asarray(
-                rb.column(names.index(scale_col))
-            ).astype(np.float64)
-            vmat = codes * scales[:, None]  # dequantize, matches q*scale
-            if met == "euclidean":
-                d2 = (
-                    (qmat_ * qmat_).sum(1)[:, None]
-                    + (vmat * vmat).sum(1)[None, :]
-                    - 2.0 * qmat_ @ vmat.T
-                )
-                dmat = np.sqrt(np.maximum(d2, 0.0))
-            elif met == "manhattan":
-                dmat = np.abs(qmat_[:, None, :] - vmat[None, :, :]).sum(-1)
-            elif met == "dot_product":
-                dmat = -(qmat_ @ vmat.T)
-            else:  # cosine
-                qn = np.linalg.norm(qmat_, axis=1)
-                vn = np.linalg.norm(vmat, axis=1)
-                denom = qn[:, None] * vn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = (qmat_ @ vmat.T) / denom
-                dmat = np.where(denom == 0.0, 1.0, 1.0 - sim)
-            take = min(kk, dmat.shape[1])
-            ids = np.asarray(rb.column(names.index(id_col)))
-            for qi, qid in enumerate(qids_):
-                # (dist, id) lexsort: map-side cut keeps lowest ids on
-                # ties (same contract as knn_join_vectorized)
-                idx = np.lexsort((ids, dmat[qi]))[:take]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([qid] * take, type=pa.int64()),
-                        pa.array(ids[idx], type=id_t),
-                        pa.array(dmat[qi, idx], type=pa.float64()),
-                    ],
-                    names=["query_id", id_col, "dist"],
-                )
+    def matrix(rb):
+        scales = np.asarray(rb.column(rb.schema.names.index(scale_col))).astype(np.float64)
+        return flat_matrix(rb, q_col, expected_dim=dim) * scales[:, None]
 
-    partial = corpus_q.select(id_col, q_col, scale_col).mapInArrow(
-        part, schema=out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy("dist", id_col)
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return batched_topk(
+        corpus_q.select(id_col, q_col, scale_col),
+        [int(qid) for qid, _ in queries],
+        LongType(),
+        qmat,
+        k,
+        metric,
+        id_col,
+        matrix,
+    ).drop("rank")
 
 
 def knn_quantized_rerank(

@@ -41,6 +41,11 @@ def test_metric_matches_numpy(spark, metric):
     }
     for i in range(len(vs)):
         assert got[i] == pytest.approx(np_metric(metric, q, vs[i]), abs=1e-9)
+    # the numpy twin agrees with the SQL expression
+    row = D.distance_matrix(metric, q[None, :], vs)[0]
+    assert row.shape == (len(vs),)
+    for i in range(len(vs)):
+        assert row[i] == pytest.approx(got[i], abs=1e-12)
 
 
 def test_cosine_zero_norm_guard(spark):
@@ -51,6 +56,12 @@ def test_cosine_zero_norm_guard(spark):
     # and zero-norm QUERY => 1.0 for everything
     z = df.select(D.distance("cosine", [0.0, 0.0], "v").alias("d")).collect()
     assert all(r["d"] == 1.0 for r in z)
+    # the numpy twin keeps the same rule: zero row, then zero query
+    vs = np.array([[0.0, 0.0], [1.0, 0.0]])
+    assert D.distance_matrix("cosine", np.array([[1.0, 1.0]]), vs)[0, 0] == 1.0
+    assert (D.distance_matrix("cosine", np.zeros((1, 2)), vs) == 1.0).all()
+    with pytest.raises(ValueError, match="unknown metric"):
+        D.distance_matrix("hamming", vs, vs)
 
 
 def test_dot_product_is_negated(spark):

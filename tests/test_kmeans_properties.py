@@ -139,10 +139,7 @@ def test_lsh_append_equals_scratch_build_on_random_corpora(spark, vecs):
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     lsh = RandomHyperplaneLSH(dim=DIM, num_tables=3, hash_size=3, seed=5)
-    path = tempfile.mkdtemp(prefix="lsh_prop_")
     cut = len(rows) // 2
-    write_lsh_index(lsh, df.filter(F.col("vec_id") < cut), path)
-    append_lsh_index(lsh, df.filter(F.col("vec_id") >= cut), path)
 
     def rows_of(d):
         return sorted(
@@ -150,4 +147,7 @@ def test_lsh_append_equals_scratch_build_on_random_corpora(spark, vecs):
             for r in d.select("vec_id", "table_idx", "sig").collect()
         )
 
-    assert rows_of(read_lsh_index(spark, path)) == rows_of(lsh.build_index(df))
+    with tempfile.TemporaryDirectory(prefix="lsh_prop_") as path:
+        write_lsh_index(lsh, df.filter(F.col("vec_id") < cut), path)
+        append_lsh_index(lsh, df.filter(F.col("vec_id") >= cut), path)
+        assert rows_of(read_lsh_index(spark, path)) == rows_of(lsh.build_index(df))
