@@ -50,6 +50,7 @@ from inmem_vector_db_spark.functions.text import (
     simhash60,
     word_shingles,
 )
+from inmem_vector_db_spark.session import memo
 
 
 def text_signature_index(
@@ -89,10 +90,6 @@ def text_signature_index(
     )
 
 
-# session-scoped memo: (applicationId, sf_dir, table) -> persisted index
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def corpus_signature_index(
     spark: SparkSession, sf_dir: str, table: str = "documents"
 ) -> DataFrame:
@@ -102,22 +99,12 @@ def corpus_signature_index(
     the same session) return the SAME DataFrame, so Spark's CacheManager
     serves the columnar cache instead of re-hashing the corpus.
     """
-    key = (spark.sparkContext.applicationId, str(sf_dir), table)
-    got = _CACHE.get(key)
-    if got is not None:
-        return got
     from inmem_vector_db_spark.sources.loader import load_table
 
-    idx = text_signature_index(load_table(spark, sf_dir, table)).persist()
-    _CACHE[key] = idx
-    return idx
-
-
-def clear_signature_cache() -> None:
-    """Unpersist and forget every memoized index (test/bench hygiene)."""
-    for df in _CACHE.values():
-        df.unpersist()
-    _CACHE.clear()
+    return memo(
+        spark, ("signature_index", str(sf_dir), table),
+        lambda: text_signature_index(load_table(spark, sf_dir, table)).persist(),
+    )
 
 
 def write_signature_index(index: DataFrame, path: str) -> None:

@@ -36,7 +36,7 @@ from inmem_vector_db_spark.operators.regress import (
     with_betas,
     with_r2,
 )
-from inmem_vector_db_spark.session import scratch_dir
+from inmem_vector_db_spark.session import memo, scratch_dir
 from inmem_vector_db_spark.sources.loader import load_table
 from inmem_vector_db_spark.streaming.ingest import drain
 
@@ -393,27 +393,24 @@ if _CONF_CALIB_CAP > 10000:
     )
 
 
-_CALIB_CAP_CHECKED: set[str] = set()
-
-
 def _check_calib_cap_against_session(spark: SparkSession) -> None:
     """Fail loudly if the SESSION's configured topKSortFallbackThreshold
     (not just the compile-time default) is below the calibration cap —
     the TakeOrderedAndProject shape the cap exists to keep would
     silently degrade to a global sort otherwise (r13 advisor)."""
-    app = spark.sparkContext.applicationId
-    if app in _CALIB_CAP_CHECKED:
-        return
-    thr = int(
-        spark.conf.get("spark.sql.execution.topKSortFallbackThreshold")
-    )
-    if _CONF_CALIB_CAP > thr:
-        raise ValueError(
-            f"_CONF_CALIB_CAP={_CONF_CALIB_CAP} exceeds the session's "
-            f"topKSortFallbackThreshold={thr}: the calibration top-k "
-            "would plan as a global sort"
+
+    def check() -> None:
+        thr = int(
+            spark.conf.get("spark.sql.execution.topKSortFallbackThreshold")
         )
-    _CALIB_CAP_CHECKED.add(app)
+        if _CONF_CALIB_CAP > thr:
+            raise ValueError(
+                f"_CONF_CALIB_CAP={_CONF_CALIB_CAP} exceeds the session's "
+                f"topKSortFallbackThreshold={thr}: the calibration top-k "
+                "would plan as a global sort"
+            )
+
+    memo(spark, ("calib_cap_checked",), check)
 
 
 def ridge_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from inmem_vector_db_spark.plans.relational import dec_revenue
-from inmem_vector_db_spark.session import scratch_dir
+from inmem_vector_db_spark.session import memo, scratch_dir
 from inmem_vector_db_spark.sources.loader import load_table
 
 _DEC = "decimal(18,4)"
@@ -720,19 +720,15 @@ ZORDER_CELLS_SQL = _zorder_sql()
 # test_bucketed_join_eliminates_shuffle).  At 100 TB this is the single
 # biggest repeated-cost lever: the orderkey shuffle is paid once at
 # ingest, then every downstream join/agg on the key is shuffle-free.
-_BUCKETED_FACTS: dict[tuple, tuple[str, str]] = {}
-
-
 def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     from inmem_vector_db_spark.sources.maintenance import write_bucketed
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BUCKETED_FACTS.get(key)
-    if got is None:
+    def build() -> tuple[str, str]:
         # stable digest (Python hash() is PYTHONHASHSEED-salted and
         # would mint new table names every interpreter run)
         import hashlib
 
+        key = (spark.sparkContext.applicationId, sf_dir)
         tag = "b" + hashlib.md5(repr(key).encode()).hexdigest()[:8]
         li_name, ord_name = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
         base = scratch_dir("bucketed_facts_")
@@ -754,9 +750,9 @@ def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 .option("path", f"{base}/{name}")
                 .saveAsTable(name)
             )
-        got = (li_name, ord_name)
-        _BUCKETED_FACTS[key] = got
-    return got
+        return li_name, ord_name
+
+    return memo(spark, ("bucketed_facts", sf_dir), build)
 
 
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:

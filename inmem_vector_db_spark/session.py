@@ -93,6 +93,30 @@ def get_spark(
     return builder.getOrCreate()
 
 
+_MEMOS: dict[tuple, object] = {}
+
+
+def memo(spark: SparkSession, key: tuple, build):
+    """The session memo: the value stored under ``(applicationId, *key)``.
+    ``build()`` runs only on a miss, and a ``build()`` that raises
+    stores nothing.  Every cross-call reuse in the engine (query
+    vectors, reader plans, persisted coarse indexes, written artifact
+    paths) goes through here, so one call forgets them all."""
+    full = (spark.sparkContext.applicationId, *key)
+    if full not in _MEMOS:
+        _MEMOS[full] = build()
+    return _MEMOS[full]
+
+
+def reset_memos(spark: SparkSession) -> None:
+    """Forget every memo (on-disk artifact paths included; the files
+    stay under the scratch root until exit) and drop every cached
+    DataFrame, so the next call of any entry redoes each build it
+    needs."""
+    _MEMOS.clear()
+    spark.catalog.clearCache()
+
+
 _SCRATCH_ROOT: list[str] = []
 
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from inmem_vector_db_spark.session import memo
+
 # Driver-generated tables (TESTDATA.md).
 TABLES = (
     "region",
@@ -43,18 +45,6 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
 
 
-# Memoized reader DataFrames: a DataFrame is an immutable plan handle,
-# and re-building reader + NTZ-normalization columns via py4j costs
-# ~80 ms per load_table call — pure client overhead charged to every
-# entry's bench row (the driver tables are immutable, so the plan can
-# never go stale).  NOT a .persist() memo: nothing registers in the
-# CacheManager, so this has none of the plan-instability hazard that
-# reset_cached_memos() exists for (cache substitution is by plan
-# equality, unaffected by object reuse).  Keyed by app id + path +
-# the chaos knob so a repartition-gated run never reuses a plain plan.
-_READER_CACHE: dict[tuple, DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Columnar parquet => column pruning + filter pushdown.
 
@@ -67,17 +57,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     import os
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        os.environ.get("SPARK_GRAFT_REPARTITION"),
-    )
-    got = _READER_CACHE.get(key)
-    if got is not None:
-        return got
-    _READER_CACHE[key] = got = _load_table_uncached(spark, sf_dir, name)
-    return got
+    # Memoized reader DataFrames: a DataFrame is an immutable plan
+    # handle, and re-building reader + NTZ-normalization columns via
+    # py4j costs ~80 ms per call — pure client overhead charged to every
+    # entry's bench row (the driver tables are immutable, so the plan
+    # can never go stale).  Not a .persist() memo: nothing registers in
+    # the CacheManager.  Keyed by path + the chaos knob so a
+    # repartition-gated run never reuses a plain plan.
+    key = ("table", sf_dir, name, os.environ.get("SPARK_GRAFT_REPARTITION"))
+    return memo(spark, key, lambda: _load_table_uncached(spark, sf_dir, name))
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

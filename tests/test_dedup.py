@@ -234,14 +234,15 @@ def test_signature_index_roundtrip(corpus, tmp_path):
 
 def test_corpus_signature_index_memoizes(spark, sf_dir):
     from inmem_vector_db_spark.operators import signatures as S
+    from inmem_vector_db_spark.session import reset_memos
 
     a = S.corpus_signature_index(spark, sf_dir)
     b = S.corpus_signature_index(spark, sf_dir)
     assert a is b
-    S.clear_signature_cache()
+    reset_memos(spark)
     c = S.corpus_signature_index(spark, sf_dir)
     assert c is not a
-    S.clear_signature_cache()
+    reset_memos(spark)
 
 
 def test_containment_pairs_finds_subset_doc(spark):

@@ -382,8 +382,8 @@ def test_plan_metrics_survive_session_memo_pollution(spark, sf_dir):
     than the recorded fresh state.  This test deliberately creates
     that hostile state — materialize the signature + recall memos,
     then clearCache — and asserts the audit machinery still reproduces
-    the recorded metrics for every entry that drifted before the
-    reset_cached_memos() fix."""
+    the recorded metrics for every entry that drifted before
+    ``plan_audit.collect`` reset the session memos."""
     import importlib.util
     import json
     import os
@@ -427,47 +427,3 @@ def test_plan_metrics_survive_session_memo_pollution(spark, sf_dir):
         if live[k] != recorded.get(k)
     }
     assert not diffs, f"memo-pollution plan drift returned: {diffs}"
-
-
-def test_persist_exonerations_are_empirically_cache_neutral(spark, sf_dir):
-    """The contract test's _PERSIST_EXONERATED table claims each listed
-    (entry, callee) is benign because the shared sig_index routes
-    around the operator's internal persist branch.  Source-reading can
-    rot; verify EMPIRICALLY: with the shared signature memo primed,
-    executing each exonerated entry must register ZERO new CacheManager
-    entries.  Positive control: a direct .persist() DOES register one —
-    proving the probe can see what the table exonerates.  (The old
-    control was boilerplate_ngrams' three-branch persist, removed by
-    the r10 window-count rewrite.)"""
-    import importlib.util
-    import os
-
-    import __spark_entry__ as entrymod
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "tec", os.path.join(repo_root, "tests", "test_entry_contract.py")
-    )
-    tec = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(tec)
-
-    qs = entrymod.queries()
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    # prime the shared signature artifact (its own persist is the
-    # family builder's, attributed to dedup_signature_index)
-    qs["dedup_signature_index"](spark, sf_dir).collect()
-
-    for name in sorted({e for e, _ in tec._PERSIST_EXONERATED}):
-        before = cm.cachedData().size()
-        qs[name](spark, sf_dir).collect()
-        after = cm.cachedData().size()
-        assert after == before, (
-            f"{name} registered {after - before} cache entries — its "
-            "_PERSIST_EXONERATED row is wrong; move it to _BUILD_ENTRIES"
-        )
-
-    before = cm.cachedData().size()
-    control = spark.range(3).persist()
-    control.count()
-    assert cm.cachedData().size() == before + 1  # control: probe works
-    control.unpersist()

@@ -1,8 +1,9 @@
 """Scratch lifecycle: every scratch path comes from
 ``session.scratch_dir`` (one per-process root in ``TMPDIR``, removed at
 exit), every bounded stream runs through ``streaming.ingest.drain``
-(which deletes the checkpoint it made), and every on-disk staging memo
-of the entry module is ``_memo_artifact``."""
+(which deletes the checkpoint it made), every on-disk staging memo
+of the entry module is ``_memo_artifact``, and every session memo is
+``session.memo``, which ``session.reset_memos`` forgets at once."""
 
 from __future__ import annotations
 
@@ -155,6 +156,60 @@ def test_process_exit_leaves_no_scratch(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert sorted(p.name for p in tmp.iterdir()) == []
+
+
+def test_memo_builds_once_and_reset_forgets(spark):
+    """A build runs once per key; one that raises stores nothing; after
+    ``reset_memos`` the build runs again and a memoized persisted
+    DataFrame is no longer cached (``storageLevel`` asks the
+    CacheManager; ``is_cached`` is a Python flag clearCache leaves)."""
+    from pyspark import StorageLevel
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(3).persist()
+
+    df = session.memo(spark, ("memo_test",), build)
+    assert session.memo(spark, ("memo_test",), build) is df
+    assert len(calls) == 1
+    assert df.count() == 3 and df.storageLevel != StorageLevel.NONE
+
+    def fail():
+        raise ValueError("build failed")
+
+    with pytest.raises(ValueError):
+        session.memo(spark, ("memo_fail",), fail)
+    assert session.memo(spark, ("memo_fail",), lambda: "built") == "built"
+
+    session.reset_memos(spark)
+    assert df.storageLevel == StorageLevel.NONE
+    assert session.memo(spark, ("memo_test",), build) is not df
+    assert len(calls) == 2
+    session.reset_memos(spark)
+
+
+def test_bench_rerun_rebuilds_instead_of_serving(spark, sf_dir):
+    """bench's re-run path starts from fresh memos: a second run of
+    ann_ivf_index_build writes a new index directory instead of serving
+    the first run's, and returns the same rows."""
+    import __spark_entry__ as entrymod
+    import bench
+
+    entry = entrymod.queries()["ann_ivf_index_build"]
+    frames = []
+
+    def recorded(spark, sf):
+        frames.append(entry(spark, sf))
+        return frames[-1]
+
+    bench.run_once(spark, sf_dir, recorded)
+    first = entrymod._ivf_index_path(spark, sf_dir)
+    bench.rerun_once(spark, sf_dir, recorded)
+    assert entrymod._ivf_index_path(spark, sf_dir) != first
+    first_rows, rerun_rows = (sorted(f.collect()) for f in frames)
+    assert first_rows == rerun_rows
 
 
 if __name__ == "__main__":

@@ -30,7 +30,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from inmem_vector_db_spark.session import get_spark  # noqa: E402
+from inmem_vector_db_spark.session import get_spark, reset_memos  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -107,10 +107,13 @@ def plan_metrics(plan: str) -> dict:
 
 def collect(spark) -> dict:
     # reproduce the fresh-session cache state regardless of what ran
-    # before in this session: plans through persisted memos differ
-    # depending on CacheManager registration (see reset_cached_memos)
-    spark.catalog.clearCache()
-    entrymod.reset_cached_memos()
+    # before in this session: plan shape through a persisted memo
+    # depends on CacheManager registration — a fresh session plans the
+    # memoized fragment as a registered InMemoryRelation (whose build
+    # subtree prints in the plan), while a session whose caches were
+    # cleared plans raw lineage that column pruning collapses
+    # differently.  PLAN_BASELINE.json is recorded against the fresh state.
+    reset_memos(spark)
     qs = entrymod.queries()
     out = {}
     for name in audited_names():

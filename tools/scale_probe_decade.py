@@ -28,7 +28,7 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from inmem_vector_db_spark.session import get_spark  # noqa: E402
+from inmem_vector_db_spark.session import get_spark, reset_memos  # noqa: E402
 
 SYNTH_DIR = "/tmp/spark_graft_sf1_synth"
 SRC_DIR = "/root/testdata/sf0.1"
@@ -119,11 +119,7 @@ def main() -> None:
                 # measure the BUILD, not a cache read: drop the memoized
                 # artifact so the timed run re-hashes the corpus (and
                 # re-caches it for the queries that follow)
-                from inmem_vector_db_spark.operators.signatures import (
-                    clear_signature_cache,
-                )
-
-                clear_signature_cache()
+                reset_memos(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).collect()
             times.append(time.perf_counter() - t0)
