@@ -14,7 +14,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inmem_vector_db_spark.operators.knn import knn, knn_join_vectorized
@@ -69,6 +69,16 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]
     return memo(spark, ("query_vecs", sf_dir), fetch)[vec_id]
 
 
+def _queries(src: DataFrame, cond: Column | None = None) -> DataFrame:
+    """The ``(query_id, query_vec)`` frame of the ``src`` rows passing
+    ``cond``, by default the recall-eval queries ``_RECALL_QIDS``."""
+    if cond is None:
+        cond = F.col("vec_id").isin(list(_RECALL_QIDS))
+    return src.filter(cond).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
 def _knn_query(metric: str, k: int = 10):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = _query_vec(spark, sf_dir, 0)
@@ -102,6 +112,215 @@ LIMIT {k}
 
 
 # ---------------------------------------------------------------------------
+# DuckDB replays of the vector algorithms.  Each builder returns SQL text
+# over the base tables only, never engine code, so every oracle composed
+# from them stays an independent check of the Spark path.  Per-query
+# fragments read a CTE ``q (query_id, qv)`` that the oracle defines.
+
+
+def _topk_cte(name: str, cand: str, k: int, by: str = "") -> str:
+    """``name (query_id, vec_id, d, rn)``: each query's exact euclidean
+    top-k among its candidate rows ``cand (query_id, vec_id,
+    embedding)``, ties to the lower vec_id.  ``by`` prefixes further
+    partition columns of ``cand`` (``"c.nprobe, "``)."""
+    return f"""{name} AS (
+  SELECT * FROM (
+    SELECT {by}c.query_id, c.vec_id,
+           list_distance(c.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d,
+           row_number() OVER (
+             PARTITION BY {by}c.query_id
+             ORDER BY list_distance(c.embedding::DOUBLE[], q.qv::DOUBLE[]), c.vec_id
+           ) AS rn
+    FROM {cand} c JOIN q ON q.query_id = c.query_id
+  ) WHERE rn <= {k}
+)"""
+
+
+# every (query, corpus row) pair: the exact scan's candidates
+_ALL_PAIRS = "(SELECT q.query_id, e.vec_id, e.embedding FROM q, embeddings e)"
+
+
+def _recall_tail(approx: str) -> str:
+    """Recall@10 per query in ``q``: the share of the exact top-10 that
+    the approximate ``(query_id, vec_id)`` CTE ``approx`` returns."""
+    return f"""{_topk_cte("exact", _ALL_PAIRS, 10)},
+hits AS (
+  SELECT a.query_id, count(*) AS n_hit
+  FROM {approx} a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
+  GROUP BY a.query_id
+)
+SELECT q.query_id, round(COALESCE(h.n_hit, 0) / 10.0, 6) AS recall_at_10
+FROM q LEFT JOIN hits h ON q.query_id = h.query_id
+ORDER BY q.query_id
+"""
+
+
+_IVF_CENTS = "vec_id % 50 = 0"  # the stride-50 centroid rows
+
+
+def _ivf_assign_ctes(
+    cent_where: str = _IVF_CENTS, corpus_where: str = "", keep: str = ""
+) -> str:
+    """``cents (cid, ce)`` and ``assigned (vec_id, embedding{keep},
+    cluster_id)``: the IVF coarse index, every corpus row passing
+    ``corpus_where`` in the list of its nearest centroid, ties to the
+    lower cid (``ivf_assign``)."""
+    cols = f"e.vec_id, e.embedding{keep}"
+    where = f"\n  WHERE {corpus_where}" if corpus_where else ""
+    return f"""cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE {cent_where}),
+assigned AS (
+  SELECT {cols},
+         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
+  FROM embeddings e, cents c{where}
+  GROUP BY {cols}
+)"""
+
+
+def _ivf_search_oracle(
+    qid: int,
+    nprobe: int = 3,
+    *,
+    cent_where: str = _IVF_CENTS,
+    corpus_where: str = "",
+    keep: str = "",
+    row_where: str = "",
+) -> str:
+    """Top-10 of query ``qid`` within its ``nprobe`` nearest lists
+    (``ivf_search`` / ``ivf_search_indexed``); ``row_where`` filters the
+    probed rows."""
+    rows = f" AND {row_where}" if row_where else ""
+    return f"""
+WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {qid}),
+{_ivf_assign_ctes(cent_where, corpus_where, keep)},
+probe AS (
+  SELECT c.cid FROM cents c, q
+  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT {nprobe}
+)
+SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
+FROM assigned a, q
+WHERE a.cluster_id IN (SELECT cid FROM probe){rows}
+ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
+LIMIT 10
+"""
+
+
+def _ivf_probe_ctes(
+    nprobe: int | tuple[int, ...] = 3,
+    cents: str = "cents",
+    assigned: str = "assigned",
+) -> str:
+    """``probe (query_id, cid, rn)``: each query's ``nprobe`` nearest
+    centroids, ``probed (query_id, cid, rn, vec_id, embedding)``: the
+    rows of those lists (``ivf_search_batch``).  A tuple ``nprobe`` adds
+    an ``nprobe`` column to both, one probe set per value."""
+    axis = ""
+    if isinstance(nprobe, tuple):
+        axis, nprobe = f", unnest({list(nprobe)}) AS n(nprobe)", "nprobe"
+    return f"""probe AS (
+  SELECT * FROM (
+    SELECT q.query_id, c.cid,
+           row_number() OVER (
+             PARTITION BY q.query_id
+             ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid
+           ) AS rn
+    FROM {cents} c, q
+  ){axis} WHERE rn <= {nprobe}
+),
+probed AS (
+  SELECT p.*, a.vec_id, a.embedding
+  FROM {assigned} a JOIN probe p ON a.cluster_id = p.cid
+)"""
+
+
+def _ivf_batch_oracle(q_where: str, nprobe: int = 3) -> str:
+    """Top-5 per query within its ``nprobe`` nearest lists."""
+    return f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE {q_where}),
+{_ivf_assign_ctes()},
+{_ivf_probe_ctes(nprobe)},
+{_topk_cte("scored", "probed", 5)}
+SELECT query_id, vec_id, round(d, 6) AS dist FROM scored
+"""
+
+
+def _pq_encode_ctes(rel: str) -> str:
+    """``cb (c, cv)``: the 16 stride-25 codewords; ``codes (vec_id, j,
+    c)``: each row of ``rel (vec_id, embedding)`` encoded as the nearest
+    codeword of each 16-dim sub-vector j, ties to the lower c
+    (``pq_codebooks`` + ``pq_encode``)."""
+    return f"""cb AS (
+  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding::DOUBLE[] AS cv
+  FROM (SELECT vec_id, embedding FROM embeddings
+        WHERE vec_id % 25 = 0 ORDER BY vec_id LIMIT 16)
+),
+sub AS (SELECT unnest(generate_series(0, 3)) AS j),
+enc AS (
+  SELECT e.vec_id, s.j, cb.c,
+         list_sum(list_transform(generate_series(1, 16),
+           i -> pow(e.embedding[s.j * 16 + i]::DOUBLE - cb.cv[s.j * 16 + i], 2))) AS d
+  FROM {rel} e, sub s, cb
+),
+codes AS (
+  SELECT vec_id, j, c FROM (
+    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
+    FROM enc
+  ) WHERE rn = 1
+)"""
+
+
+# PQ search over q (query_id, qv DOUBLE[]) and its candidate rows
+# probed (query_id, vec_id, embedding): encode each DISTINCT candidate
+# once (codes are query-independent), ADC-rank by the per-query lookup
+# table, keep the 50 best, then ranked = the exact re-rank top-10
+# (``pq_search`` / ``ivfpq_search``).
+_PQ_SEARCH_CTES = f"""{_pq_encode_ctes("(SELECT DISTINCT vec_id, embedding FROM probed)")},
+lut AS (
+  SELECT q.query_id, s.j, cb.c,
+         list_sum(list_transform(generate_series(1, 16),
+           i -> pow(q.qv[s.j * 16 + i] - cb.cv[s.j * 16 + i], 2))) AS ld
+  FROM q, sub s, cb
+),
+adc AS (
+  SELECT p.query_id, p.vec_id, list_sum(list(lut.ld ORDER BY codes.j)) AS adc_d
+  FROM probed p
+  JOIN codes ON codes.vec_id = p.vec_id
+  JOIN lut ON lut.query_id = p.query_id AND codes.j = lut.j AND codes.c = lut.c
+  GROUP BY p.query_id, p.vec_id
+),
+cand AS (
+  SELECT query_id, vec_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_d, vec_id) AS rn
+    FROM adc
+  ) WHERE rn <= 50
+),
+{_topk_cte("ranked", "(SELECT * FROM probed JOIN cand USING (query_id, vec_id))", 10)}"""
+
+
+def _lsh_sig_ctes(tables: int = 20, corpus_where: str = "TRUE") -> str:
+    """``planes (j, p)``: the md5-derived hyperplanes of ``md5_planes``,
+    4 per table; ``csig (vec_id, table_idx, sig)``: each table's
+    signature of every ``corpus`` row passing ``corpus_where``."""
+    return f"""corpus AS (SELECT vec_id, embedding FROM embeddings WHERE {corpus_where}),
+planes AS (
+  SELECT j, list(val ORDER BY d) AS p
+  FROM (
+    SELECT j.j AS j, d.d AS d,
+           ((('0x'||substr(md5('lshplane|'||j.j||'|'||d.d),1,15))::UBIGINT % 2001)::BIGINT
+            - 1000) / 1000.0 AS val
+    FROM generate_series(0, {4 * tables - 1}) AS j(j), generate_series(0, 63) AS d(d)
+  )
+  GROUP BY j
+),
+csig AS (
+  SELECT e.vec_id, p.j // 4 AS table_idx,
+         string_agg(CASE WHEN list_inner_product(e.embedding::DOUBLE[], p.p) >= 0
+                         THEN '1' ELSE '0' END, '' ORDER BY p.j) AS sig
+  FROM corpus e, planes p
+  GROUP BY e.vec_id, p.j // 4
+)"""
+
+
+# ---------------------------------------------------------------------------
 # driver entry points
 
 
@@ -121,9 +340,7 @@ def _knn_multi_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     |corpus|*|Q|.  Oracle-identical to the expression path (the
     expression path remains covered by tests/test_knn.py parity)."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb, F.col("vec_id") < 4)
     return knn_join_vectorized(emb, queries, k=5, metric="cosine").select(
         "query_id", "vec_id", F.round("dist", 6).alias("dist")
     )
@@ -252,26 +469,6 @@ def _ann_ivf_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.round("dist", 6).alias("dist"))
 
 
-_ANN_IVF_ORACLE = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 1),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 3
-)
-SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM assigned a, q
-WHERE a.cluster_id IN (SELECT cid FROM probe)
-ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-LIMIT 10
-"""
-
-
 def _ann_ivf_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered ANN (the vector-store staple the reference lacks: probe
     the index, keep only rows passing a metadata predicate, exact
@@ -291,26 +488,6 @@ def _ann_ivf_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.round("dist", 6).alias("dist"))
 
 
-_ANN_IVF_PREFILTER_ORACLE = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 1),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding, e.label,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding, e.label
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 5
-)
-SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM assigned a, q
-WHERE a.cluster_id IN (SELECT cid FROM probe) AND a.label = 2
-ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-LIMIT 10
-"""
-
-
 def _ann_ivf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched IVF ANN: 3 queries, each probing its 3 nearest of the
     deterministic stride-50 lists, one distributed pass (broadcast
@@ -318,9 +495,7 @@ def _ann_ivf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inmem_vector_db_spark.operators.ann import ivf_search_batch
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb, F.col("vec_id") < 3)
     centroids, assigned = _ivf_coarse(spark, sf_dir)
     return ivf_search_batch(
         emb, queries, k=5, nprobe=3, stride=50, metric="euclidean",
@@ -346,12 +521,8 @@ def _ann_query_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, assigned = _ivf_coarse(spark, sf_dir)
     feed = _memo_artifact(
         spark, sf_dir, "query_feed_",
-        lambda path: emb.filter(
-            (F.col("vec_id") >= 12) & (F.col("vec_id") < 20)
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        ).repartition(4).write.mode("append").parquet(path),
+        lambda path: _queries(emb, (F.col("vec_id") >= 12) & (F.col("vec_id") < 20))
+        .repartition(4).write.mode("append").parquet(path),
     )
     stream_in = (
         spark.readStream.schema("query_id bigint, query_vec array<float>")
@@ -375,73 +546,6 @@ def _ann_query_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
-_ANN_QUERY_STREAM_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id >= 12 AND vec_id < 20),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid
-           ) AS rn
-    FROM cents c, q
-  ) WHERE rn <= 3
-),
-scored AS (
-  SELECT p.query_id, a.vec_id,
-         list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d,
-         row_number() OVER (
-           PARTITION BY p.query_id
-           ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-         ) AS rn
-  FROM assigned a
-  JOIN probe p ON a.cluster_id = p.cid
-  JOIN q ON q.query_id = p.query_id
-)
-SELECT query_id, vec_id, round(d, 6) AS dist FROM scored WHERE rn <= 5
-"""
-
-
-_ANN_IVF_MULTI_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 3),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid
-           ) AS rn
-    FROM cents c, q
-  ) WHERE rn <= 3
-),
-scored AS (
-  SELECT p.query_id, a.vec_id,
-         list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d,
-         row_number() OVER (
-           PARTITION BY p.query_id
-           ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-         ) AS rn
-  FROM assigned a
-  JOIN probe p ON a.cluster_id = p.cid
-  JOIN q ON q.query_id = p.query_id
-)
-SELECT query_id, vec_id, round(d, 6) AS dist FROM scored WHERE rn <= 5
-"""
-
-
 def _ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the IVF index vs the exact scan, per query — the
     quality metric that decides nprobe on a real corpus.  Both legs are
@@ -451,9 +555,7 @@ def _ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inmem_vector_db_spark.operators.ann import ivf_search_batch
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb)
     centroids, assigned = _ivf_coarse(spark, sf_dir)
     approx = ivf_search_batch(
         emb, queries, k=10, nprobe=3, stride=50, metric="euclidean",
@@ -462,55 +564,12 @@ def _ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_exact(spark, sf_dir, approx, k=10)
 
 
-_ANN_IVF_RECALL_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN (2, 7, 11, 19)),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid
-           ) AS rn
-    FROM cents c, q
-  ) WHERE rn <= 3
-),
-approx AS (
-  SELECT query_id, vec_id FROM (
-    SELECT p.query_id, a.vec_id,
-           row_number() OVER (
-             PARTITION BY p.query_id
-             ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-           ) AS rn
-    FROM assigned a
-    JOIN probe p ON a.cluster_id = p.cid
-    JOIN q ON q.query_id = p.query_id
-  ) WHERE rn <= 10
-),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), e.vec_id
-           ) AS rn
-    FROM embeddings e, q
-  ) WHERE rn <= 10
-),
-hits AS (
-  SELECT a.query_id, count(*) AS n_hit
-  FROM approx a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-  GROUP BY a.query_id
-)
-SELECT q.query_id, round(COALESCE(h.n_hit, 0) / 10.0, 6) AS recall_at_10
-FROM q LEFT JOIN hits h ON q.query_id = h.query_id
-ORDER BY q.query_id
-"""
+_ANN_IVF_RECALL_ORACLE = f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN {_RECALL_QIDS}),
+{_ivf_assign_ctes()},
+{_ivf_probe_ctes()},
+{_topk_cte("approx", "probed", 10)},
+{_recall_tail("approx")}"""
 
 
 def _lsh_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -604,30 +663,8 @@ def _lsh_signature_summary_oracle(corpus_where: str = "TRUE") -> str:
     checksum), parametrized by a corpus predicate so the compaction
     entry can prove the folded artifact equals a scratch build over the
     surviving ids."""
-    return _LSH_SIGNATURE_INDEX_ORACLE.replace(
-        "FROM embeddings e, planes p",
-        f"FROM (SELECT * FROM embeddings WHERE {corpus_where}) e, planes p",
-    )
-
-
-_LSH_SIGNATURE_INDEX_ORACLE = """
-WITH planes AS (
-  SELECT j, list(val ORDER BY d) AS p
-  FROM (
-    SELECT j.j AS j, d.d AS d,
-           ((('0x'||substr(md5('lshplane|'||j.j||'|'||d.d),1,15))::UBIGINT % 2001)::BIGINT
-            - 1000) / 1000.0 AS val
-    FROM generate_series(0, 79) AS j(j), generate_series(0, 63) AS d(d)
-  )
-  GROUP BY j
-),
-csig AS (
-  SELECT e.vec_id, p.j // 4 AS table_idx,
-         string_agg(CASE WHEN list_inner_product(e.embedding::DOUBLE[], p.p) >= 0
-                         THEN '1' ELSE '0' END, '' ORDER BY p.j) AS sig
-  FROM embeddings e, planes p
-  GROUP BY e.vec_id, p.j // 4
-),
+    return f"""
+WITH {_lsh_sig_ctes(20, corpus_where)},
 b AS (
   SELECT table_idx, sig, count(*) AS n,
          sum(('0x'||substr(md5(vec_id||'|'||table_idx||'|'||sig),1,15))::UBIGINT
@@ -656,68 +693,12 @@ def _lsh_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inmem_vector_db_spark.operators.lsh import RandomHyperplaneLSH
 
     emb = _emb(spark, sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _queries(emb, F.col("vec_id") < 4)
     lsh = RandomHyperplaneLSH(dim=64, num_tables=20, hash_size=4, plane_scheme="md5")
     index = spark.read.parquet(f"{_lsh_index_path(spark, sf_dir)}/signatures")
     return lsh.search(emb, queries_df, k=5, metric="cosine", index=index).select(
         "query_id", "vec_id", F.round("dist", 6).alias("dist")
     )
-
-
-_LSH_KNN_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 4),
-planes AS (
-  SELECT j, list(val ORDER BY d) AS p
-  FROM (
-    SELECT j.j AS j, d.d AS d,
-           ((('0x'||substr(md5('lshplane|'||j.j||'|'||d.d),1,15))::UBIGINT % 2001)::BIGINT
-            - 1000) / 1000.0 AS val
-    FROM generate_series(0, 79) AS j(j), generate_series(0, 63) AS d(d)
-  )
-  GROUP BY j
-),
-csig AS (
-  SELECT e.vec_id, p.j // 4 AS table_idx,
-         string_agg(CASE WHEN list_inner_product(e.embedding::DOUBLE[], p.p) >= 0
-                         THEN '1' ELSE '0' END, '' ORDER BY p.j) AS sig
-  FROM embeddings e, planes p
-  GROUP BY e.vec_id, p.j // 4
-),
-qsig AS (
-  SELECT q.query_id, p.j // 4 AS table_idx,
-         string_agg(CASE WHEN list_inner_product(q.qv::DOUBLE[], p.p) >= 0
-                         THEN '1' ELSE '0' END, '' ORDER BY p.j) AS sig
-  FROM q, planes p
-  GROUP BY q.query_id, p.j // 4
-),
-cand AS (
-  SELECT DISTINCT qs.query_id, cs.vec_id
-  FROM qsig qs JOIN csig cs USING (table_idx, sig)
-),
-full_q AS (SELECT query_id FROM cand GROUP BY query_id HAVING count(*) >= 5),
-approx AS (
-  SELECT c.query_id, c.vec_id,
-         1.0 - list_cosine_similarity(e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.vec_id
-  JOIN q ON q.query_id = c.query_id
-  WHERE c.query_id IN (SELECT query_id FROM full_q)
-),
-fallback AS (
-  SELECT q.query_id, e.vec_id,
-         1.0 - list_cosine_similarity(e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d
-  FROM q, embeddings e
-  WHERE q.query_id NOT IN (SELECT query_id FROM full_q)
-),
-ranked AS (
-  SELECT query_id, vec_id, d,
-         row_number() OVER (PARTITION BY query_id ORDER BY d, vec_id) AS rn
-  FROM (SELECT * FROM approx UNION ALL SELECT * FROM fallback)
-)
-SELECT query_id, vec_id, round(d, 6) AS dist FROM ranked WHERE rn <= 5
-"""
 
 
 def _lsh_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -730,11 +711,7 @@ def _lsh_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inmem_vector_db_spark.operators.lsh import RandomHyperplaneLSH
 
     emb = _emb(spark, sf_dir)
-    queries_df = emb.filter(
-        (F.col("vec_id") >= 4) & (F.col("vec_id") < 8)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _queries(emb, (F.col("vec_id") >= 4) & (F.col("vec_id") < 8))
     lsh = RandomHyperplaneLSH(dim=64, num_tables=10, hash_size=4, plane_scheme="md5")
     # md5 planes depend only on (plane_idx, dim), so tables 0..9 of the
     # written 20-table artifact ARE this 10-table index — partition
@@ -747,90 +724,25 @@ def _lsh_knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "vec_id", F.round("dist", 6).alias("dist"))
 
 
-_LSH_MULTIPROBE_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id >= 4 AND vec_id < 8),
-planes AS (
-  SELECT j, list(val ORDER BY d) AS p
-  FROM (
-    SELECT j.j AS j, d.d AS d,
-           ((('0x'||substr(md5('lshplane|'||j.j||'|'||d.d),1,15))::UBIGINT % 2001)::BIGINT
-            - 1000) / 1000.0 AS val
-    FROM generate_series(0, 39) AS j(j), generate_series(0, 63) AS d(d)
-  )
-  GROUP BY j
-),
-csig AS (
-  SELECT e.vec_id, p.j // 4 AS table_idx,
-         string_agg(CASE WHEN list_inner_product(e.embedding::DOUBLE[], p.p) >= 0
-                         THEN '1' ELSE '0' END, '' ORDER BY p.j) AS sig
-  FROM embeddings e, planes p
-  GROUP BY e.vec_id, p.j // 4
-),
-qsig AS (
-  SELECT q.query_id, p.j // 4 AS table_idx,
-         string_agg(CASE WHEN list_inner_product(q.qv::DOUBLE[], p.p) >= 0
-                         THEN '1' ELSE '0' END, '' ORDER BY p.j) AS sig
-  FROM q, planes p
-  GROUP BY q.query_id, p.j // 4
-),
-cand AS (
-  SELECT DISTINCT qs.query_id, cs.vec_id
-  FROM qsig qs JOIN csig cs ON qs.table_idx = cs.table_idx
+def _lsh_search_oracle(
+    q_where: str, corpus_where: str = "TRUE", tables: int = 20, radius: int = 0
+) -> str:
+    """LSH top-5 cosine search replay (``RandomHyperplaneLSH.search``):
+    candidates share a bucket with the query in some table (within
+    hamming ``radius`` of its signature when multi-probing), a query
+    with fewer than 5 candidates falls back to the exact scan, and the
+    candidates are re-ranked exactly.  ``corpus_where`` lets the
+    maintenance entries prove append and tombstone-delete give EXACTLY
+    a from-scratch search over the corresponding corpus."""
+    match = "USING (table_idx, sig)"
+    if radius:
+        match = f"""ON qs.table_idx = cs.table_idx
    AND len(list_filter([1, 2, 3, 4],
-           i -> substr(qs.sig, i, 1) <> substr(cs.sig, i, 1))) <= 1
-),
-full_q AS (SELECT query_id FROM cand GROUP BY query_id HAVING count(*) >= 5),
-approx AS (
-  SELECT c.query_id, c.vec_id,
-         1.0 - list_cosine_similarity(e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.vec_id
-  JOIN q ON q.query_id = c.query_id
-  WHERE c.query_id IN (SELECT query_id FROM full_q)
-),
-fallback AS (
-  SELECT q.query_id, e.vec_id,
-         1.0 - list_cosine_similarity(e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d
-  FROM q, embeddings e
-  WHERE q.query_id NOT IN (SELECT query_id FROM full_q)
-),
-ranked AS (
-  SELECT query_id, vec_id, d,
-         row_number() OVER (PARTITION BY query_id ORDER BY d, vec_id) AS rn
-  FROM (SELECT * FROM approx UNION ALL SELECT * FROM fallback)
-)
-SELECT query_id, vec_id, round(d, 6) AS dist FROM ranked WHERE rn <= 5
-"""
-
-
-def _lsh_search_oracle(q_where: str, corpus_where: str = "TRUE") -> str:
-    """The 20-table LSH search replay (same CTE chain as
-    ``_LSH_KNN_ORACLE``) parametrized by query-id range and a corpus
-    predicate — the maintenance entries reuse it because append and
-    tombstone-delete must produce EXACTLY a from-scratch search over
-    the corresponding corpus."""
+           i -> substr(qs.sig, i, 1) <> substr(cs.sig, i, 1))) <= {radius}"""
     return f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
            WHERE {q_where}),
-corpus AS (SELECT vec_id, embedding FROM embeddings WHERE {corpus_where}),
-planes AS (
-  SELECT j, list(val ORDER BY d) AS p
-  FROM (
-    SELECT j.j AS j, d.d AS d,
-           ((('0x'||substr(md5('lshplane|'||j.j||'|'||d.d),1,15))::UBIGINT % 2001)::BIGINT
-            - 1000) / 1000.0 AS val
-    FROM generate_series(0, 79) AS j(j), generate_series(0, 63) AS d(d)
-  )
-  GROUP BY j
-),
-csig AS (
-  SELECT e.vec_id, p.j // 4 AS table_idx,
-         string_agg(CASE WHEN list_inner_product(e.embedding::DOUBLE[], p.p) >= 0
-                         THEN '1' ELSE '0' END, '' ORDER BY p.j) AS sig
-  FROM corpus e, planes p
-  GROUP BY e.vec_id, p.j // 4
-),
+{_lsh_sig_ctes(tables, corpus_where)},
 qsig AS (
   SELECT q.query_id, p.j // 4 AS table_idx,
          string_agg(CASE WHEN list_inner_product(q.qv::DOUBLE[], p.p) >= 0
@@ -840,7 +752,7 @@ qsig AS (
 ),
 cand AS (
   SELECT DISTINCT qs.query_id, cs.vec_id
-  FROM qsig qs JOIN csig cs USING (table_idx, sig)
+  FROM qsig qs JOIN csig cs {match}
 ),
 full_q AS (SELECT query_id FROM cand GROUP BY query_id HAVING count(*) >= 5),
 approx AS (
@@ -901,11 +813,7 @@ def _lsh_index_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _memo_artifact(spark, sf_dir, "lsh_app_", build)
     emb = _emb(spark, sf_dir)
-    queries_df = emb.filter(
-        (F.col("vec_id") >= 8) & (F.col("vec_id") < 12)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _queries(emb, (F.col("vec_id") >= 8) & (F.col("vec_id") < 12))
     return lsh.search(
         emb, queries_df, k=5, metric="cosine",
         index=read_lsh_index(spark, path),
@@ -941,9 +849,7 @@ def _lsh_index_delete_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = _emb(spark, sf_dir)
     corpus = emb.filter(~F.col("vec_id").isin(list(_LSH_DELETED_IDS)))
-    queries_df = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries_df = _queries(emb, F.col("vec_id") < 4)
     return lsh.search(
         corpus, queries_df, k=5, metric="cosine",
         index=read_lsh_index(spark, path),
@@ -1092,25 +998,8 @@ def _pq_codebook_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CODEBOOK_BUILD_ORACLE = """
-WITH cb AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding::DOUBLE[] AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % 25 = 0 ORDER BY vec_id LIMIT 16)
-),
-sub AS (SELECT unnest(generate_series(0, 3)) AS j),
-enc AS (
-  SELECT e.vec_id, s.j, cb.c,
-         list_sum(list_transform(generate_series(1, 16),
-           i -> pow(e.embedding[s.j * 16 + i]::DOUBLE - cb.cv[s.j * 16 + i], 2))) AS d
-  FROM embeddings e, sub s, cb
-),
-codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
-    FROM enc
-  ) WHERE rn = 1
-),
+_PQ_CODEBOOK_BUILD_ORACLE = f"""
+WITH {_pq_encode_ctes("embeddings")},
 packed AS (
   SELECT vec_id,
          CAST(sum(c * CASE j WHEN 0 THEN 4096 WHEN 1 THEN 256
@@ -1125,43 +1014,11 @@ FROM packed
 """
 
 
-_KNN_PQ_ORACLE = """
-WITH cb AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding::DOUBLE[] AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % 25 = 0 ORDER BY vec_id LIMIT 16)
-),
-sub AS (SELECT unnest(generate_series(0, 3)) AS j),
-enc AS (
-  SELECT e.vec_id, s.j, cb.c,
-         list_sum(list_transform(generate_series(1, 16),
-           i -> pow(e.embedding[s.j * 16 + i]::DOUBLE - cb.cv[s.j * 16 + i], 2))) AS d
-  FROM embeddings e, sub s, cb
-),
-codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
-    FROM enc
-  ) WHERE rn = 1
-),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 7),
-lut AS (
-  SELECT s.j, cb.c,
-         list_sum(list_transform(generate_series(1, 16),
-           i -> pow(q.qv[s.j * 16 + i] - cb.cv[s.j * 16 + i], 2))) AS ld
-  FROM q, sub s, cb
-),
-adc AS (
-  SELECT codes.vec_id, list_sum(list(lut.ld ORDER BY codes.j)) AS adc_d
-  FROM codes JOIN lut ON codes.j = lut.j AND codes.c = lut.c
-  GROUP BY codes.vec_id
-),
-cand AS (SELECT vec_id FROM adc ORDER BY adc_d, vec_id LIMIT 50)
-SELECT e.vec_id,
-       round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM embeddings e JOIN cand USING (vec_id), q
-ORDER BY list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), e.vec_id
-LIMIT 10
+_KNN_PQ_ORACLE = f"""
+WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 7),
+probed AS {_ALL_PAIRS},
+{_PQ_SEARCH_CTES}
+SELECT vec_id, round(d, 6) AS dist FROM ranked
 """
 
 
@@ -1184,57 +1041,12 @@ def _ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.round("dist", 6).alias("dist"))
 
 
-_ANN_IVFPQ_ORACLE = """
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 7),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 3
-),
-pruned AS (
-  SELECT vec_id, embedding FROM assigned
-  WHERE cluster_id IN (SELECT cid FROM probe)
-),
-cb AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding::DOUBLE[] AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % 25 = 0 ORDER BY vec_id LIMIT 16)
-),
-sub AS (SELECT unnest(generate_series(0, 3)) AS j),
-enc AS (
-  SELECT e.vec_id, s.j, cb.c,
-         list_sum(list_transform(generate_series(1, 16),
-           i -> pow(e.embedding[s.j * 16 + i]::DOUBLE - cb.cv[s.j * 16 + i], 2))) AS d
-  FROM pruned e, sub s, cb
-),
-codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
-    FROM enc
-  ) WHERE rn = 1
-),
-lut AS (
-  SELECT s.j, cb.c,
-         list_sum(list_transform(generate_series(1, 16),
-           i -> pow(q.qv[s.j * 16 + i] - cb.cv[s.j * 16 + i], 2))) AS ld
-  FROM q, sub s, cb
-),
-adc AS (
-  SELECT codes.vec_id, list_sum(list(lut.ld ORDER BY codes.j)) AS adc_d
-  FROM codes JOIN lut ON codes.j = lut.j AND codes.c = lut.c
-  GROUP BY codes.vec_id
-),
-cand AS (SELECT vec_id FROM adc ORDER BY adc_d, vec_id LIMIT 50)
-SELECT e.vec_id,
-       round(list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM pruned e JOIN cand USING (vec_id), q
-ORDER BY list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), e.vec_id
-LIMIT 10
+_ANN_IVFPQ_ORACLE = f"""
+WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 7),
+{_ivf_assign_ctes()},
+{_ivf_probe_ctes()},
+{_PQ_SEARCH_CTES}
+SELECT vec_id, round(d, 6) AS dist FROM ranked
 """
 
 
@@ -1336,13 +1148,8 @@ def _ann_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_IVF_INDEX_BUILD_ORACLE = """
-WITH cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
+_ANN_IVF_INDEX_BUILD_ORACLE = f"""
+WITH {_ivf_assign_ctes()},
 sizes AS (SELECT cluster_id, count(*) AS n FROM assigned GROUP BY 1)
 SELECT CAST(sum(n) AS BIGINT) AS n_vectors,
        count(*) AS n_lists,
@@ -1448,26 +1255,6 @@ def _ann_ivf_rebuild_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_IVF_REBUILD_ORACLE = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 7),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 3
-)
-SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM assigned a, q
-WHERE a.cluster_id IN (SELECT cid FROM probe)
-ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-LIMIT 10
-"""
-
-
 def _ivf_shard_b_path(spark: SparkSession, sf_dir: str) -> str:
     """The INDEPENDENTLY-built second shard (vectors with vec_id >=
     250, centroids stride-derived from ITS OWN corpus) — the input the
@@ -1510,48 +1297,6 @@ def _ann_ivf_merge_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_search_indexed(spark, path, q, k=10, nprobe=3).select(
         "vec_id", F.round("dist", 6).alias("dist")
     )
-
-
-_ANN_IVF_MERGE_ORACLE = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 11),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 250),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 3
-)
-SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM assigned a, q
-WHERE a.cluster_id IN (SELECT cid FROM probe)
-ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-LIMIT 10
-"""
-
-
-_ANN_IVF_APPEND_ORACLE = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 1),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 250),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 3
-)
-SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM assigned a, q
-WHERE a.cluster_id IN (SELECT cid FROM probe)
-ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-LIMIT 10
-"""
 
 
 def _ann_index_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1603,27 +1348,6 @@ def _ann_index_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_INDEX_STREAM_APPEND_ORACLE = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 5),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings
-          WHERE vec_id % 50 = 0 AND vec_id < 250),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 3
-)
-SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM assigned a, q
-WHERE a.cluster_id IN (SELECT cid FROM probe)
-ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-LIMIT 10
-"""
-
-
 _IVF_DELETED_IDS = (1, 3, 7)
 
 
@@ -1652,28 +1376,6 @@ def _ann_ivf_delete_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_search_indexed(spark, path, q, k=10, nprobe=3).select(
         "vec_id", F.round("dist", 6).alias("dist")
     )
-
-
-_ANN_IVF_DELETE_ORACLE = f"""
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 1),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c
-  WHERE e.vec_id NOT IN {_IVF_DELETED_IDS}
-  GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT c.cid FROM cents c, q
-  ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid LIMIT 3
-)
-SELECT a.vec_id, round(list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), 6) AS dist
-FROM assigned a, q
-WHERE a.cluster_id IN (SELECT cid FROM probe)
-ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-LIMIT 10
-"""
 
 
 def _kmeans_coarse(spark: SparkSession, sf_dir: str):
@@ -1776,9 +1478,7 @@ def _ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inmem_vector_db_spark.operators.ann import ivf_search_batch
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb)
     cids, cmat, assigned = _kmeans_coarse(spark, sf_dir)
     approx = ivf_search_batch(
         emb, queries, k=10, nprobe=3, stride=50, metric="euclidean",
@@ -1787,52 +1487,13 @@ def _ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_exact(spark, sf_dir, approx, k=10)
 
 
-
 _ANN_IVF_KMEANS_RECALL_ORACLE = f"""
 WITH {_KMEANS_CTES},
 q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      FROM embeddings WHERE vec_id IN {tuple(_RECALL_QIDS)}),
-probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(c.ce, q.qv), c.cid
-           ) AS rn
-    FROM c2 c, q
-  ) WHERE rn <= 3
-),
-approx AS (
-  SELECT query_id, vec_id FROM (
-    SELECT p.query_id, a.vec_id,
-           row_number() OVER (
-             PARTITION BY p.query_id
-             ORDER BY list_distance(a.embedding::DOUBLE[], q.qv), a.vec_id
-           ) AS rn
-    FROM a3 a
-    JOIN probe p ON a.cluster_id = p.cid
-    JOIN q ON q.query_id = p.query_id
-  ) WHERE rn <= 10
-),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(e.embedding::DOUBLE[], q.qv), e.vec_id
-           ) AS rn
-    FROM embeddings e, q
-  ) WHERE rn <= 10
-),
-hits AS (
-  SELECT a.query_id, count(*) AS n_hit
-  FROM approx a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-  GROUP BY a.query_id
-)
-SELECT q.query_id, round(COALESCE(h.n_hit, 0) / 10.0, 6) AS recall_at_10
-FROM q LEFT JOIN hits h ON q.query_id = h.query_id
-ORDER BY q.query_id
-"""
+      FROM embeddings WHERE vec_id IN {_RECALL_QIDS}),
+{_ivf_probe_ctes(cents="c2", assigned="a3")},
+{_topk_cte("approx", "probed", 10)},
+{_recall_tail("approx")}"""
 
 
 def _exact_recall_baseline(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -1845,9 +1506,7 @@ def _exact_recall_baseline(spark: SparkSession, sf_dir: str, k: int) -> DataFram
 
     def build() -> DataFrame:
         emb = _emb(spark, sf_dir)
-        queries = emb.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        )
+        queries = _queries(emb)
         return (
             knn_join_vectorized(emb, queries, k=k, metric="euclidean")
             .select("query_id", "vec_id")
@@ -1861,12 +1520,9 @@ def _recall_vs_exact(
     spark: SparkSession, sf_dir: str, approx: DataFrame, k: int = 10
 ) -> DataFrame:
     """(query_id, recall_at_10) of an approx (query_id, vec_id) result
-    against the exact euclidean top-k — shared by the IVF-PQ and
-    int8-quantized recall entries (mirrors ``_ann_ivf_recall``)."""
+    against the exact euclidean top-k of the ``_RECALL_QIDS`` queries."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb)
     exact = _exact_recall_baseline(spark, sf_dir, k)
     hits = (
         approx.join(exact, ["query_id", "vec_id"])
@@ -1916,95 +1572,11 @@ def _ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ANN_IVFPQ_RECALL_ORACLE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           FROM embeddings WHERE vec_id IN {tuple(_RECALL_QIDS)}),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid
-           ) AS rn
-    FROM cents c, q
-  ) WHERE rn <= 3
-),
-pruned AS (
-  SELECT p.query_id, a.vec_id, a.embedding
-  FROM assigned a JOIN probe p ON a.cluster_id = p.cid
-),
-cb AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding::DOUBLE[] AS cv
-  FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE vec_id % 25 = 0 ORDER BY vec_id LIMIT 16)
-),
-sub AS (SELECT unnest(generate_series(0, 3)) AS j),
--- PQ codes are query-independent: encode each DISTINCT pruned vector once
-enc AS (
-  SELECT e.vec_id, s.j, cb.c,
-         list_sum(list_transform(generate_series(1, 16),
-           i -> pow(e.embedding[s.j * 16 + i]::DOUBLE - cb.cv[s.j * 16 + i], 2))) AS d
-  FROM (SELECT DISTINCT vec_id, embedding FROM pruned) e, sub s, cb
-),
-codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, j ORDER BY d, c) AS rn
-    FROM enc
-  ) WHERE rn = 1
-),
-lut AS (
-  SELECT q.query_id, s.j, cb.c,
-         list_sum(list_transform(generate_series(1, 16),
-           i -> pow(q.qv[s.j * 16 + i] - cb.cv[s.j * 16 + i], 2))) AS ld
-  FROM q, sub s, cb
-),
-adc AS (
-  SELECT p.query_id, p.vec_id, list_sum(list(lut.ld ORDER BY codes.j)) AS adc_d
-  FROM pruned p
-  JOIN codes ON codes.vec_id = p.vec_id
-  JOIN lut ON lut.query_id = p.query_id AND codes.j = lut.j AND codes.c = lut.c
-  GROUP BY p.query_id, p.vec_id
-),
-cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_d, vec_id) AS rn
-    FROM adc
-  ) WHERE rn <= 50
-),
-approx AS (
-  SELECT query_id, vec_id FROM (
-    SELECT p.query_id, p.vec_id,
-           row_number() OVER (
-             PARTITION BY p.query_id
-             ORDER BY list_distance(p.embedding::DOUBLE[], q.qv::DOUBLE[]), p.vec_id
-           ) AS rn
-    FROM pruned p JOIN cand USING (query_id, vec_id)
-    JOIN q ON q.query_id = p.query_id
-  ) WHERE rn <= 10
-),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), e.vec_id
-           ) AS rn
-    FROM embeddings e, q
-  ) WHERE rn <= 10
-),
-hits AS (
-  SELECT a.query_id, count(*) AS n_hit
-  FROM approx a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-  GROUP BY a.query_id
-)
-SELECT q.query_id, round(coalesce(h.n_hit, 0) / 10.0, 6) AS recall_at_10
-FROM q LEFT JOIN hits h ON q.query_id = h.query_id
-ORDER BY q.query_id
-"""
+           FROM embeddings WHERE vec_id IN {_RECALL_QIDS}),
+{_ivf_assign_ctes()},
+{_ivf_probe_ctes()},
+{_PQ_SEARCH_CTES},
+{_recall_tail("ranked")}"""
 
 
 def _ann_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2018,18 +1590,16 @@ def _ann_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = emb.select(
         "vec_id", F.slice("embedding", 1, 32).alias("embedding")
     )
-    queries = half.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(half)
     approx = knn_join_vectorized(half, queries, k=10, metric="euclidean").select(
         "query_id", "vec_id"
     )
     return _recall_vs_exact(spark, sf_dir, approx)
 
 
-_ANN_TRUNCATED_RECALL_ORACLE = """
+_ANN_TRUNCATED_RECALL_ORACLE = f"""
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id IN (2, 7, 11, 19)),
+q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id IN {_RECALL_QIDS}),
 approx AS (
   SELECT query_id, vec_id FROM (
     SELECT q.query_id, b.vec_id,
@@ -2040,25 +1610,7 @@ approx AS (
     FROM base b, q
   ) WHERE rn <= 10
 ),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, b.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(b.v, q.qv), b.vec_id
-           ) AS rn
-    FROM base b, q
-  ) WHERE rn <= 10
-),
-hits AS (
-  SELECT a.query_id, count(*) AS n_hit
-  FROM approx a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-  GROUP BY a.query_id
-)
-SELECT q.query_id, round(coalesce(h.n_hit, 0) / 10.0, 6) AS recall_at_10
-FROM q LEFT JOIN hits h ON q.query_id = h.query_id
-ORDER BY q.query_id
-"""
+{_recall_tail("approx")}"""
 
 
 def _ivf_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2076,9 +1628,7 @@ def _ivf_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inmem_vector_db_spark.operators.ann import probe_lists
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb)
     centroids, assigned = _ivf_coarse(spark, sf_dir)
     cids, cmat = centroids
     exact = _exact_recall_baseline(spark, sf_dir, 10)
@@ -2173,57 +1723,19 @@ def _ivf_nprobe_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_NPROBE_TRADEOFF_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN (2, 7, 11, 19)),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-np AS (SELECT unnest([1, 2, 3, 5]) AS nprobe),
-ranked_cents AS (
-  SELECT q.query_id, c.cid,
-         row_number() OVER (
-           PARTITION BY q.query_id
-           ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid
-         ) AS crn
-  FROM cents c, q
-),
-probe AS (
-  SELECT n.nprobe, r.query_id, r.cid FROM ranked_cents r, np n WHERE r.crn <= n.nprobe
-),
-approx AS (
-  SELECT nprobe, query_id, vec_id FROM (
-    SELECT p.nprobe, p.query_id, a.vec_id,
-           row_number() OVER (
-             PARTITION BY p.nprobe, p.query_id
-             ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-           ) AS rn
-    FROM assigned a
-    JOIN probe p ON a.cluster_id = p.cid
-    JOIN q ON q.query_id = p.query_id
-  ) WHERE rn <= 10
-),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), e.vec_id
-           ) AS rn
-    FROM embeddings e, q
-  ) WHERE rn <= 10
-),
+_IVF_NPROBE_TRADEOFF_ORACLE = f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN {_RECALL_QIDS}),
+{_ivf_assign_ctes()},
+{_ivf_probe_ctes((1, 2, 3, 5))},
+{_topk_cte("approx", "probed", 10, by="c.nprobe, ")},
+{_topk_cte("exact", _ALL_PAIRS, 10)},
 hits AS (
   SELECT a.nprobe, a.query_id, count(*) AS n_hit
   FROM approx a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
   GROUP BY a.nprobe, a.query_id
 ),
 scanned AS (
-  SELECT p.nprobe, p.query_id, count(*) AS n_scanned
-  FROM probe p JOIN assigned a ON a.cluster_id = p.cid
-  GROUP BY p.nprobe, p.query_id
+  SELECT nprobe, query_id, count(*) AS n_scanned FROM probed GROUP BY nprobe, query_id
 )
 SELECT s.nprobe, s.query_id,
        round(COALESCE(h.n_hit, 0) / 10.0, 6) AS recall_at_10,
@@ -2253,9 +1765,7 @@ def _retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from inmem_vector_db_spark.operators.ann import ivf_search_batch
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb)
     exact = knn_join_vectorized(emb, queries, k=10, metric="euclidean")
     wq = Window.partitionBy("query_id").orderBy("dist", "vec_id")
     exact = exact.select(
@@ -2296,49 +1806,15 @@ def _retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RETRIEVAL_EVAL_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN (2, 7, 11, 19)),
-cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id % 50 = 0),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         min(struct_pack(d := list_distance(e.embedding::DOUBLE[], c.ce::DOUBLE[]), c := c.cid))['c'] AS cluster_id
-  FROM embeddings e, cents c GROUP BY e.vec_id, e.embedding
-),
-probe AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(c.ce::DOUBLE[], q.qv::DOUBLE[]), c.cid
-           ) AS rn
-    FROM cents c, q
-  ) WHERE rn <= 3
-),
-approx AS (
-  SELECT query_id, vec_id, rn AS pos FROM (
-    SELECT p.query_id, a.vec_id,
-           row_number() OVER (
-             PARTITION BY p.query_id
-             ORDER BY list_distance(a.embedding::DOUBLE[], q.qv::DOUBLE[]), a.vec_id
-           ) AS rn
-    FROM assigned a
-    JOIN probe p ON a.cluster_id = p.cid
-    JOIN q ON q.query_id = p.query_id
-  ) WHERE rn <= 10
-),
-exact AS (
-  SELECT query_id, vec_id, rn AS exact_rank FROM (
-    SELECT q.query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]), e.vec_id
-           ) AS rn
-    FROM embeddings e, q
-  ) WHERE rn <= 10
-),
+_RETRIEVAL_EVAL_ORACLE = f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN {_RECALL_QIDS}),
+{_ivf_assign_ctes()},
+{_ivf_probe_ctes()},
+{_topk_cte("approx", "probed", 10)},
+{_topk_cte("exact", _ALL_PAIRS, 10)},
 graded AS (
-  SELECT a.query_id, a.pos,
-         COALESCE(11 - x.exact_rank, 0) AS rel
+  SELECT a.query_id, a.rn AS pos,
+         COALESCE(11 - x.rn, 0) AS rel
   FROM approx a LEFT JOIN exact x
     ON a.query_id = x.query_id AND a.vec_id = x.vec_id
 ),
@@ -2467,39 +1943,21 @@ def _rp_recall_oracle() -> str:
 
     return f"""
 WITH {projection_oracle_ctes(out_dim=16, in_dim=64)},
-q AS (SELECT vec_id AS query_id, p AS qp FROM pr WHERE vec_id IN (2, 7, 11, 19)),
+q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN {_RECALL_QIDS}),
+qp AS (SELECT vec_id AS query_id, p FROM pr WHERE vec_id IN {_RECALL_QIDS}),
 approx AS (
   SELECT query_id, vec_id FROM (
-    SELECT q.query_id, e.vec_id,
+    SELECT qp.query_id, e.vec_id,
            row_number() OVER (
-             PARTITION BY q.query_id
+             PARTITION BY qp.query_id
              ORDER BY list_sum(list_transform(range(1, 17),
-                        j -> (e.p[j] - q.qp[j]) * (e.p[j] - q.qp[j]))),
+                        j -> (e.p[j] - qp.p[j]) * (e.p[j] - qp.p[j]))),
                       e.vec_id
            ) AS rn
-    FROM pr e, q
+    FROM pr e, qp
   ) WHERE rn <= 10
 ),
-fq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id IN (2, 7, 11, 19)),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT fq.query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY fq.query_id
-             ORDER BY list_distance(e.embedding::DOUBLE[], fq.qv::DOUBLE[]), e.vec_id
-           ) AS rn
-    FROM embeddings e, fq
-  ) WHERE rn <= 10
-),
-hits AS (
-  SELECT a.query_id, count(*) AS n_hit
-  FROM approx a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-  GROUP BY a.query_id
-)
-SELECT q.query_id, round(COALESCE(h.n_hit, 0) / 10.0, 6) AS recall_at_10
-FROM q LEFT JOIN hits h ON q.query_id = h.query_id
-ORDER BY q.query_id
-"""
+{_recall_tail("approx")}"""
 
 
 def _rp_distortion_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2610,9 +2068,7 @@ def _contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same partial-top-k shape as every kNN entry: per-partition
     numpy top-k, Q×k-row merge.  Anchors = the shared eval query set."""
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id").isin(list(_RECALL_QIDS))).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _queries(emb)
     nn = knn_join_vectorized(emb, queries, k=11, metric="cosine")
     nn = nn.filter(F.col("vec_id") != F.col("query_id"))
     from pyspark.sql import Window
@@ -2675,7 +2131,7 @@ def _knn_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KNN_QUANTIZED_RECALL_ORACLE = f"""
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id IN {tuple(_RECALL_QIDS)}),
+q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id IN {_RECALL_QIDS}),
 quant AS (
   SELECT vec_id, v,
          CASE WHEN list_max(list_transform(v, x -> abs(x))) = 0 THEN 1.0::FLOAT
@@ -2708,25 +2164,7 @@ approx AS (
     FROM cand c JOIN q USING (query_id)
   ) WHERE rn <= 10
 ),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.query_id, b.vec_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_distance(b.v, q.qv), b.vec_id
-           ) AS rn
-    FROM base b, q
-  ) WHERE rn <= 10
-),
-hits AS (
-  SELECT a.query_id, count(*) AS n_hit
-  FROM approx a JOIN exact x ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-  GROUP BY a.query_id
-)
-SELECT q.query_id, round(coalesce(h.n_hit, 0) / 10.0, 6) AS recall_at_10
-FROM q LEFT JOIN hits h ON q.query_id = h.query_id
-ORDER BY q.query_id
-"""
+{_recall_tail("approx")}"""
 
 
 def _label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4065,11 +3503,9 @@ _DRIVER_WINDOW = [
 
 # rows-only window slots (no DuckDB value oracle); every other windowed
 # entry must carry a value oracle — pinned by tests/test_entry_contract.py.
-# r14: dedup_simhash_fast rotates in with the rest of the r7-vintage
-# cohort; it is rows-only BY DESIGN (xxhash64 signatures are not
-# portable to DuckDB) and its value-grade contract
-# (dedup_simhash_fast_check, windowed right after it) grades it against
-# the portable md5 twin.
+# dedup_simhash_fast is rows-only because its xxhash64 signatures are
+# not portable to DuckDB; dedup_simhash_fast_check, windowed right after
+# it, grades it against the portable md5 twin.
 _ROWS_ONLY_WINDOWED: set[str] = {"dedup_simhash_fast"}
 
 
@@ -4087,6 +3523,7 @@ def _entries() -> dict[str, tuple]:
         packing, regression, relational, textops, tpch_extra,
     )
 
+    base250 = f"{_IVF_CENTS} AND vec_id < 250"
     out = {
         "knn_cosine": (_knn_query("cosine"), _knn_oracle("cosine")),
         "knn_euclidean": (_knn_query("euclidean"), _knn_oracle("euclidean")),
@@ -4095,10 +3532,15 @@ def _entries() -> dict[str, tuple]:
         "knn_multi_cosine": (_knn_multi_cosine, _KNN_MULTI_ORACLE),
         "knn_prefilter_label": (_knn_prefilter_label, _KNN_PREFILTER_ORACLE),
         "knn_postfilter_parity": (_knn_postfilter_parity, _KNN_POSTFILTER_ORACLE),
-        "ann_ivf_euclidean": (_ann_ivf_euclidean, _ANN_IVF_ORACLE),
-        "ann_ivf_prefilter": (_ann_ivf_prefilter, _ANN_IVF_PREFILTER_ORACLE),
-        "ann_ivf_multi": (_ann_ivf_multi, _ANN_IVF_MULTI_ORACLE),
-        "ann_query_stream": (_ann_query_stream, _ANN_QUERY_STREAM_ORACLE),
+        "ann_ivf_euclidean": (_ann_ivf_euclidean, _ivf_search_oracle(1)),
+        "ann_ivf_prefilter": (
+            _ann_ivf_prefilter,
+            _ivf_search_oracle(1, 5, keep=", e.label", row_where="a.label = 2"),
+        ),
+        "ann_ivf_multi": (_ann_ivf_multi, _ivf_batch_oracle("vec_id < 3")),
+        "ann_query_stream": (
+            _ann_query_stream, _ivf_batch_oracle("vec_id >= 12 AND vec_id < 20")
+        ),
         "ann_ivf_recall": (_ann_ivf_recall, _ANN_IVF_RECALL_ORACLE),
         "retrieval_eval_metrics": (_retrieval_eval_metrics, _RETRIEVAL_EVAL_ORACLE),
         "ivf_nprobe_tradeoff": (_ivf_nprobe_tradeoff, _IVF_NPROBE_TRADEOFF_ORACLE),
@@ -4106,20 +3548,25 @@ def _entries() -> dict[str, tuple]:
         # which must attribute to this row in exec_order
         "pq_codebook_build": (_pq_codebook_build, _PQ_CODEBOOK_BUILD_ORACLE),
         "ann_ivfpq": (_ann_ivfpq, _ANN_IVFPQ_ORACLE),
-        "lsh_signature_index": (_lsh_signature_index, _LSH_SIGNATURE_INDEX_ORACLE),
-        "lsh_knn_cosine": (_lsh_knn_cosine, _LSH_KNN_ORACLE),
-        "lsh_knn_multiprobe": (_lsh_knn_multiprobe, _LSH_MULTIPROBE_ORACLE),
+        "lsh_signature_index": (
+            _lsh_signature_index, _lsh_signature_summary_oracle()
+        ),
+        "lsh_knn_cosine": (_lsh_knn_cosine, _lsh_search_oracle("vec_id < 4")),
+        "lsh_knn_multiprobe": (
+            _lsh_knn_multiprobe,
+            _lsh_search_oracle("vec_id >= 4 AND vec_id < 8", tables=10, radius=1),
+        ),
         "lsh_index_append_search": (
             _lsh_index_append_search,
             _lsh_search_oracle("vec_id >= 8 AND vec_id < 12"),
         ),
         "lsh_index_delete_search": (
             _lsh_index_delete_search,
-            _lsh_search_oracle("vec_id < 4", "vec_id NOT IN (5, 6)"),
+            _lsh_search_oracle("vec_id < 4", f"vec_id NOT IN {_LSH_DELETED_IDS}"),
         ),
         "lsh_index_compact_stats": (
             _lsh_index_compact_stats,
-            _lsh_signature_summary_oracle("vec_id NOT IN (5, 6)"),
+            _lsh_signature_summary_oracle(f"vec_id NOT IN {_LSH_DELETED_IDS}"),
         ),
         "store_search_pipeline": (_store_search_pipeline, _STORE_PIPELINE_ORACLE),
         "store_crud_lifecycle": (_store_crud_lifecycle, _STORE_CRUD_ORACLE),
@@ -4187,20 +3634,30 @@ def _entries() -> dict[str, tuple]:
         "rp_distortion_stats": (_rp_distortion_stats, _rp_distortion_oracle()),
         "contrastive_pair_mining": (_contrastive_pair_mining, _CONTRASTIVE_PAIR_ORACLE),
         "ann_ivf_index_build": (_ann_ivf_index_build, _ANN_IVF_INDEX_BUILD_ORACLE),
-        "ann_ivf_partitioned": (_ann_ivf_partitioned, _ANN_IVF_ORACLE),
+        "ann_ivf_partitioned": (_ann_ivf_partitioned, _ivf_search_oracle(1)),
         "kmeans_embeddings": (_kmeans_embeddings, _KMEANS_EMB_ORACLE),
         "ann_ivf_kmeans_recall": (
             _ann_ivf_kmeans_recall,
             _ANN_IVF_KMEANS_RECALL_ORACLE,
         ),
-        "ann_ivf_append_search": (_ann_ivf_append_search, _ANN_IVF_APPEND_ORACLE),
-        "ann_ivf_rebuild_search": (_ann_ivf_rebuild_search, _ANN_IVF_REBUILD_ORACLE),
-        "ann_ivf_merge_search": (_ann_ivf_merge_search, _ANN_IVF_MERGE_ORACLE),
-        "ann_index_stream_append": (
-            _ann_index_stream_append,
-            _ANN_INDEX_STREAM_APPEND_ORACLE,
+        # the lifecycle entries over the base build (vec_id < 250) keep its
+        # centroids: the oracles assign the whole corpus to them
+        "ann_ivf_append_search": (
+            _ann_ivf_append_search, _ivf_search_oracle(1, cent_where=base250)
         ),
-        "ann_ivf_delete_search": (_ann_ivf_delete_search, _ANN_IVF_DELETE_ORACLE),
+        "ann_ivf_rebuild_search": (_ann_ivf_rebuild_search, _ivf_search_oracle(7)),
+        "ann_ivf_merge_search": (
+            _ann_ivf_merge_search, _ivf_search_oracle(11, cent_where=base250)
+        ),
+        "ann_index_stream_append": (
+            _ann_index_stream_append, _ivf_search_oracle(5, cent_where=base250)
+        ),
+        "ann_ivf_delete_search": (
+            _ann_ivf_delete_search,
+            _ivf_search_oracle(
+                1, corpus_where=f"e.vec_id NOT IN {_IVF_DELETED_IDS}"
+            ),
+        ),
         "incremental_signature_stream": (
             _incremental_signature_stream,
             textops.DEDUP_MINHASH_SQL,

@@ -742,14 +742,7 @@ def _bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             (li, li_name, ["l_orderkey"]),
             (orders, ord_name, ["o_orderkey"]),
         ):
-            (
-                df.write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(8, *cols)
-                .sortBy(*cols)
-                .option("path", f"{base}/{name}")
-                .saveAsTable(name)
-            )
+            write_bucketed(df, name, f"{base}/{name}", cols, 8, sort_cols=cols)
         return li_name, ord_name
 
     return memo(spark, ("bucketed_facts", sf_dir), build)

@@ -62,13 +62,14 @@ def compact(
 def write_bucketed(
     df,
     table_name: str,
+    path: str,
     bucket_cols: list[str],
     num_buckets: int = 8,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
 ):
     """Persist a DataFrame as a hash-bucketed (and optionally
-    sort-clustered) managed table.
+    sort-clustered) table ``table_name`` whose files live at ``path``.
 
     Bucketing is the pre-computed half of a shuffle: rows are hash
     partitioned by ``bucket_cols`` AT WRITE TIME, so every later join or
@@ -85,7 +86,7 @@ def write_bucketed(
     w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
+    w.option("path", path).saveAsTable(table_name)
 
 
 def zorder_value(cols, bits: int = 8):

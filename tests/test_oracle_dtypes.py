@@ -50,3 +50,37 @@ def test_no_hash_breaking_oracle_output_types(con):
         "oracle SQL produces driver-hash-breaking column types "
         f"(CAST to BIGINT/DOUBLE): {offenders}"
     )
+
+
+def test_ivf_replay_probing_every_list_is_the_exact_scan(con):
+    """The shared IVF replay builders, checked without Spark: with every
+    inverted list probed, the single-query and the per-query IVF replays
+    return exactly the exact scan's rows; with one list probed, they
+    miss some true neighbours (on the suite's sf0.001 corpus; at sf0.1
+    query 0's nearest list happens to hold all ten)."""
+    n_lists = con.sql(
+        f"SELECT count(*) FROM embeddings WHERE {entrymod._IVF_CENTS}"
+    ).fetchone()[0]
+    exact = con.sql(entrymod._knn_oracle("euclidean")).fetchall()
+    assert con.sql(entrymod._ivf_search_oracle(0, n_lists)).fetchall() == exact
+    assert con.sql(entrymod._ivf_search_oracle(0, 1)).fetchall() != exact
+
+    q_where = "vec_id < 3"
+    exact_per_query = sorted(
+        con.sql(f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE {q_where}),
+r AS (
+  SELECT q.query_id, e.vec_id,
+         list_distance(e.embedding::DOUBLE[], q.qv::DOUBLE[]) AS d
+  FROM q, embeddings e
+)
+SELECT query_id, vec_id, round(d, 6) AS dist FROM r
+QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY d, vec_id) <= 5
+""").fetchall()
+    )
+
+    def batch(nprobe: int) -> list[tuple]:
+        return sorted(con.sql(entrymod._ivf_batch_oracle(q_where, nprobe)).fetchall())
+
+    assert batch(n_lists) == exact_per_query
+    assert batch(1) != exact_per_query

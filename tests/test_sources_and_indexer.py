@@ -99,7 +99,7 @@ def test_jsonl_and_orc_sources_roundtrip(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
+def test_bucketed_join_eliminates_shuffle(spark, sf_dir, tmp_path):
     """Two tables bucketed on the same key join with NO Exchange —
     the write-time hash partitioning replaces the per-query shuffle."""
     from pyspark.sql import functions as F
@@ -107,8 +107,12 @@ def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
     from inmem_vector_db_spark.sources.maintenance import write_bucketed
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    write_bucketed(emb.select("vec_id", "label"), "bkt_a", ["vec_id"], 4)
-    write_bucketed(emb.select("vec_id", "embedding"), "bkt_b", ["vec_id"], 4)
+    write_bucketed(
+        emb.select("vec_id", "label"), "bkt_a", str(tmp_path / "bkt_a"), ["vec_id"], 4
+    )
+    write_bucketed(
+        emb.select("vec_id", "embedding"), "bkt_b", str(tmp_path / "bkt_b"), ["vec_id"], 4
+    )
     try:
         with_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -14,9 +14,12 @@ Usage:
     python tools/ab_entry_probe.py --tree /root/repo/.ab_r8 ... name...
 
 Prints one JSON line: {"tree": ..., "sf": ..., "timings": {name: sec}}.
-Each entry is timed ONCE (first call, build-inclusive — matching how
-bench times build rows); pass --warm to add a second timed call per
-entry (memo-hit cost) under "warm".
+Each entry is timed once through the tree's ``bench.run_once`` (first
+call, build-inclusive, as bench times every row).  --warm adds a second
+pass, after every first call, that re-times each entry through
+``bench.rerun_once`` under "warm": session memos are reset first, so
+the entry redoes every build it needs, as bench's ``min_of_2`` re-runs
+do; the warm time is never a memo hit.
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 
 def main() -> int:
@@ -41,6 +43,7 @@ def main() -> int:
     os.chdir(tree)  # relative paths (spark-warehouse) resolve per-tree
 
     import __spark_entry__ as entrymod
+    from bench import rerun_once, run_once, warmup
     from inmem_vector_db_spark.session import get_spark
 
     spark = get_spark("ab_probe")
@@ -49,8 +52,6 @@ def main() -> int:
     # timings measure the entry, not first-touch JIT (and both trees
     # start from the identical state)
     try:
-        from bench import warmup
-
         warmup(spark, args.sf)
         warmup_failed = None
     except Exception as exc:  # a cold tree breaks the A/B premise —
@@ -61,21 +62,14 @@ def main() -> int:
     qmap = entrymod.queries()
     pos = {n: i for i, n in enumerate(entrymod.exec_order())}
     names = sorted(args.names, key=lambda n: pos[n])
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    for name in names:
-        t0 = time.perf_counter()
-        qmap[name](spark, args.sf).collect()
-        timings[name] = round(time.perf_counter() - t0, 3)
-        if args.warm:
-            t0 = time.perf_counter()
-            qmap[name](spark, args.sf).collect()
-            warm[name] = round(time.perf_counter() - t0, 3)
+    timings = {n: round(run_once(spark, args.sf, qmap[n]), 3) for n in names}
     out = {"tree": tree, "sf": args.sf, "timings": timings}
     if warmup_failed is not None:
         out["warmup_failed"] = warmup_failed
     if args.warm:
-        out["warm"] = warm
+        out["warm"] = {
+            n: round(rerun_once(spark, args.sf, qmap[n]), 3) for n in names
+        }
     print(json.dumps(out, separators=(",", ":")))
     return 0
 
